@@ -60,13 +60,22 @@ object Bench {
     // loadavg 60 on a 32-core host is measuring the neighbors, not the
     // engine — stamping it into the artifact makes contamination
     // visible to any reader instead of silently inflating the record.
+    // A query that throws keeps no timing: its time up to the throw
+    // would read as a (fast) result. Its name goes to `failed` instead.
+    val failed = scala.collection.mutable.SortedSet[String]()
     def timedLoop(): Map[String, Double] =
       SparkEntry.queries.toSeq.filter(q => only.forall(_(q._1)))
-        .sortBy(_._1).map { case (name, fn) =>
+        .sortBy(_._1).flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        name -> (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            failed += name
+            None
+        }
       }.toMap
     val loads = scala.collection.mutable.ArrayBuffer[Double]()
     val perRun = (1 to runs).map { _ => loads += loadavg(); timedLoop() }
@@ -74,9 +83,11 @@ object Bench {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
     }
-    val results = perRun.head.keys.map { name =>
+    // a query that failed in any run is in no median and not in the total
+    val results = perRun.flatMap(_.keySet).toSet.diff(failed).map { name =>
       name -> median(perRun.map(_(name)))
     }.toMap
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // ms precision on the printed line: the driver captures only the
     // tail of our stdout, and at 100+ queries a full-double-precision
     // map overflows that window and truncates the line's head (the r03
@@ -92,7 +103,7 @@ object Bench {
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal.toPlainString
     val loadsJson = loads.map(r3).mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"queries":${fmtQ(results, 3)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"failed":$failedJson,"queries":${fmtQ(results, 3)},"sf":"$sfDir"}"""
     println(line)
     // machine-readable medians file (SPARK_GRAFT_BENCH_OUT): the
     // regression baseline the next round diffs against — per-query
@@ -113,7 +124,8 @@ object Bench {
     // though the full per-query line above overflows the window.
     val slowest = results.toSeq.sortBy(-_._2).take(10).toMap
     println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"n_queries":${results.size},"slowest":${fmtQ(slowest, 3)},"queries_file":"$outPath","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"failed":$failedJson,"n_queries":${results.size},"slowest":${fmtQ(slowest, 3)},"queries_file":"$outPath","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

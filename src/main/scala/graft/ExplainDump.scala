@@ -8,7 +8,7 @@ package graft
   *
   * Env:
   *  - SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  *  - SPARK_GRAFT_CPUS     local core count (default 32)
+  *  - SPARK_GRAFT_CPUS     local core count (default: the host's cores)
   *  - SPARK_GRAFT_PLAN_DIR output dir (default plans/r15)
   *  - SPARK_GRAFT_PLAN_SUFFIX file suffix (default "_before")
   *  - SPARK_GRAFT_PLAN_ONLY comma-separated query-name filter
@@ -16,7 +16,7 @@ package graft
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r15")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_before")
     val only = sys.env.get("SPARK_GRAFT_PLAN_ONLY")

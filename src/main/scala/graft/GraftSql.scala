@@ -543,11 +543,9 @@ object GraftSql {
           "incremental backup (SETTINGS base_backup) needs the " +
             "partitioned-directory arm — the chain references its base " +
             "by path, and a zip is an immutable interchange object")
-        operators.Snapshot.backupIncremental(df, tsColumnOf(df, settings), base, dest)
-        // verified row count from the resolved chain's manifest — the
-        // same metadata-scale read RESTORE DATABASE reports from
-        operators.Snapshot.parts(spark, dest)
-          .agg(org.apache.spark.sql.functions.sum("n_rows")).head.getLong(0)
+        // verified row count: the per-day digests the resolved chain
+        // was just checked against, summed on the driver
+        operators.Snapshot.backupIncrementalReport(df, tsColumnOf(df, settings), base, dest).rows
       case None if dest.endsWith(".zip") =>
         val stage = dest + ".stage"
         val n = operators.Snapshot.backup(df, tsColumnOf(df, settings), stage)
@@ -645,12 +643,11 @@ object GraftSql {
     require(tables.nonEmpty, s"no table snapshots under $dest")
     val rows = tables.map { t =>
       val tdir = s"$dir/$t"
-      operators.Snapshot.resolve(spark, tdir).createOrReplaceTempView(t)
+      val manifest = operators.Snapshot.requireManifest(spark, tdir)
+      operators.Snapshot.resolve(spark, tdir, Some(manifest)).createOrReplaceTempView(t)
       if (!dest.endsWith(".zip")) spark.conf.set(s"graft.snapshot.$db.$t", tdir)
-      // row count from the manifest — metadata-scale, no data footers
-      val n = operators.Snapshot.parts(spark, tdir)
-        .agg(sum("n_rows")).head.getLong(0)
-      (t, n)
+      // row count from the manifest just read, summed on the driver
+      (t, manifest._2.map(_._2).sum)
     }
     rows.toDF("table", "n_rows")
   }

@@ -12,13 +12,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * (guide §7.1/§7.2). Read-only with respect to the query surface.
   *
   * Usage: sbt "runMain graft.Profile <name> [<name> ...]"
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32),
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (the host's cores),
   *      SPARK_GRAFT_PROFILE_RUNS (default 3).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt
     val spark = Graft.builder("graft-profile", Some(s"local[$cpus]"), cpus.toInt)
       .config("spark.ui.enabled", "false")

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The backup/restore loop itself (layer [R]): `BACKUP DATABASE … TO
   * Disk` (backup.sh:45) with the post-write validation of
@@ -22,6 +23,17 @@ object Snapshot {
     * `spark.read.parquet(dest)` of the data never picks it up.
     */
   private val ManifestDir = "_graft_manifest"
+
+  /** The manifest's fixed schema (its only writer is [[writeManifest]]):
+    * reads pass it explicitly, so none starts a schema-inference job.
+    */
+  private val ManifestSchema = StructType.fromDDL("bucket_day STRING, " +
+    "n_rows BIGINT, content_xor BIGINT, content_sum STRING, source STRING, base_path STRING")
+
+  /** A manifest as read: the base path if the snapshot is incremental,
+    * and one (day, n_rows, xor, sum, source) row per day partition.
+    */
+  private[graft] type Manifest = (Option[String], Seq[(String, Long, Long, String, String)])
 
   /** Per-day-partition content digest: row count + XOR and
     * overflow-free decimal SUM of the per-row `xxhash64` over all data
@@ -88,7 +100,22 @@ object Snapshot {
     * Returns (changedDays, totalDays).
     */
   def backupIncremental(df: DataFrame, ts: Column, baseDir: String,
-      dest: String): (Int, Int) = graft.AtomicDir.withLease(dest) {
+      dest: String): (Int, Int) = {
+    val r = backupIncrementalReport(df, ts, baseDir, dest)
+    (r.changedDays, r.totalDays)
+  }
+
+  /** Outcome of an incremental backup; `rows` is the verified row count
+    * of the resolved chain.
+    */
+  final case class IncrementalReport(changedDays: Int, totalDays: Int, rows: Long)
+
+  /** [[backupIncremental]] with the verified row count, summed on the
+    * driver from the per-day digests the resolved chain was checked
+    * against — no re-read of the manifest just written.
+    */
+  private[graft] def backupIncrementalReport(df: DataFrame, ts: Column, baseDir: String,
+      dest: String): IncrementalReport = graft.AtomicDir.withLease(dest) {
     val spark = df.sparkSession
     val (_, baseRows) = readManifest(spark, baseDir).getOrElse(
       throw new IllegalArgumentException(
@@ -118,7 +145,7 @@ object Snapshot {
     }.sortBy(_._1)
     require(resolved.sameElements(curDig),
       s"incremental snapshot validation failed: resolved view diverges from source (dest=$dest)")
-    (changed.length, curDig.length)
+    IncrementalReport(changed.length, curDig.length, curDig.map(_._2).sum)
   }
 
   /** Chain-resolving restore: a full snapshot reads directly; an
@@ -129,9 +156,17 @@ object Snapshot {
     * Days deleted since the base simply aren't in the manifest: restore
     * reproduces the state at backup time, like RESTORE from a BACKUP
     * chain.
+    *
+    * Each manifest of the chain is read exactly once: a base's manifest
+    * serves both the broken-chain check and the recursion into the base.
     */
   def resolve(spark: SparkSession, dest: String): DataFrame =
-    readManifest(spark, dest) match {
+    resolve(spark, dest, readManifest(spark, dest))
+
+  /** [[resolve]] over a manifest the caller has already read. */
+  private[graft] def resolve(spark: SparkSession, dest: String,
+      manifest: Option[Manifest]): DataFrame =
+    manifest match {
       case None | Some((None, _)) => restore(spark, dest)
       case Some((Some(base), rows)) =>
         val deltaDays = rows.collect { case (d, _, _, _, "delta") => d }
@@ -140,7 +175,8 @@ object Snapshot {
         // if the base was GC'd past days this delta still attributes to
         // it, a silent filter would return a "successful" restore
         // missing those days
-        readManifest(spark, base).foreach { case (_, baseRows) =>
+        val baseManifest = readManifest(spark, base)
+        baseManifest.foreach { case (_, baseRows) =>
           val have = baseRows.map(_._1).toSet
           val missing = baseDays.filterNot(have)
           require(missing.isEmpty,
@@ -148,7 +184,7 @@ object Snapshot {
               s"${missing.mkString(", ")} that $dest attributes to it " +
               "(base GC'd after the delta was taken?)")
         }
-        val fromBase = resolve(spark, base)
+        val fromBase = resolve(spark, base, baseManifest)
           .filter(col("bucket_day").isin(baseDays: _*))
         if (deltaDays.isEmpty) fromBase // nothing changed: no delta footers exist
         else restore(spark, dest)
@@ -302,9 +338,10 @@ object Snapshot {
     *
     * Scale shape: one predicate scan finds the affected days (pruned
     * to the predicate's partition column when it names `bucket_day`),
-    * then each affected day rewrites independently — cost is O(matched
-    * days), never O(snapshot). Unaffected days keep their files and
-    * manifest digests untouched. Day swaps use the same rename-aside
+    * then ONE partitioned write rewrites all of them — cost is
+    * O(matched days) in data, never O(snapshot), and a fixed number of
+    * Spark jobs whatever the number of days. Unaffected days keep their
+    * files and manifest digests untouched. Day swaps use the same rename-aside
     * discipline as [[compact]]; a crash leaves every day either old or
     * new.
     *
@@ -336,6 +373,11 @@ object Snapshot {
     val r = mutate(spark, dest, predicate, { day =>
       val bad = assignments.keySet -- day.columns.toSet
       require(bad.isEmpty, s"update assigns to unknown column(s): ${bad.mkString(", ")}")
+      // the rewrite is written partitioned by day: an assigned
+      // bucket_day would move rows across partitions (ClickHouse refuses
+      // UPDATE of a partition key column the same way)
+      require(!assignments.contains("bucket_day"),
+        "update cannot assign the partition column bucket_day")
       val fields = day.schema.fields.map(f => f.name -> f.dataType).toMap
       day.select(day.columns.map { c =>
         assignments.get(c) match {
@@ -359,8 +401,8 @@ object Snapshot {
     */
   def deduplicate(spark: SparkSession, dest: String): MutationReport = {
     recoverMutationDebris(spark, dest)
-    val (base, manifestRows) = requireManifest(spark, dest)
-    val resolved = resolve(spark, dest)
+    val manifest = requireManifest(spark, dest)
+    val resolved = resolve(spark, dest, Some(manifest))
     val dataCols = resolved.columns.filterNot(_ == "bucket_day").sorted
     val perDay = resolved.groupBy("bucket_day").agg(
       count(lit(1)).as("n"),
@@ -368,7 +410,7 @@ object Snapshot {
     val dup = perDay.filter(r => r.getLong(1) > r.getLong(2))
     val report =
       if (dup.isEmpty) MutationReport(Nil, Nil, 0L)
-      else rewriteDayPartitions(spark, dest, base, manifestRows,
+      else rewriteDayPartitions(spark, dest, manifest, resolved,
         dup.map(_.getString(0)).sorted.toSeq, _.dropDuplicates(),
         dup.map(r => r.getLong(1) - r.getLong(2)).sum)
     logMutation(spark, dest, "OPTIMIZE DEDUPLICATE", "", report)
@@ -379,6 +421,11 @@ object Snapshot {
     * mutation command run against the snapshot.
     */
   private val MutationsDir = "_graft_mutations"
+
+  /** The mutation log's fixed schema (its only writer is [[logMutation]]). */
+  private val MutationsSchema = StructType.fromDDL("mutation_id BIGINT, " +
+    "event_time_ms BIGINT, command STRING, predicate STRING, days_rewritten BIGINT, " +
+    "days_dropped BIGINT, rows_affected BIGINT, is_done BOOLEAN")
 
   /** A stable rendering of the mutation predicate for the audit log —
     * Column.toString's prefix form, e.g. `=(event_type, 'error')`.
@@ -392,14 +439,11 @@ object Snapshot {
     * like the manifest; model-scale by construction.
     */
   def mutations(spark: SparkSession, dest: String): DataFrame = {
-    import spark.implicits._
     graft.AtomicDir.recover(s"$dest/$MutationsDir")
-    try spark.read.parquet(s"$dest/$MutationsDir")
+    try spark.read.schema(MutationsSchema).parquet(s"$dest/$MutationsDir")
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
-        Seq.empty[(Long, Long, String, String, Long, Long, Long, Boolean)]
-          .toDF("mutation_id", "event_time_ms", "command", "predicate",
-            "days_rewritten", "days_dropped", "rows_affected", "is_done")
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema)
     }
   }
 
@@ -445,7 +489,7 @@ object Snapshot {
     }
   }
 
-  private def requireManifest(spark: SparkSession, dest: String) =
+  private[graft] def requireManifest(spark: SparkSession, dest: String): Manifest =
     readManifest(spark, dest).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot at $dest has no manifest — re-run Snapshot.backup on it"))
@@ -462,62 +506,62 @@ object Snapshot {
   private def mutate(spark: SparkSession, dest: String, predicate: Column,
       rewriteDay: DataFrame => DataFrame): MutationReport = {
     recoverMutationDebris(spark, dest)
-    val (base, manifestRows) = requireManifest(spark, dest)
+    val manifest = requireManifest(spark, dest)
+    val resolved = resolve(spark, dest, Some(manifest))
     // one pass over the resolved view: which days contain matches, and
     // how many rows (metadata-scale collect — one row per affected day)
-    val hits = digestScan(resolve(spark, dest).filter(predicate))
+    val hits = digestScan(resolved.filter(predicate))
     if (hits.isEmpty) return MutationReport(Nil, Nil, 0L)
-    rewriteDayPartitions(spark, dest, base, manifestRows,
+    rewriteDayPartitions(spark, dest, manifest, resolved,
       hits.map(_._1).sorted, rewriteDay, hits.map(_._2).sum)
   }
+
+  /** Staging root of a mutation's rewrite, at the snapshot root. The
+    * `_mutate_tmp_` prefix is what [[recoverMutationDebris]] sweeps.
+    */
+  private[graft] val MutateStaging = "_mutate_tmp_staging"
 
   /** Shared day-granular rewrite core of [[delete]]/[[update]]/
     * [[deduplicate]]: swap each affected day via rename-aside, drop
     * emptied days, re-digest only what changed, update the manifest.
+    * `resolved` is the caller's resolve over `manifest` — the snapshot
+    * is resolved once per mutation.
     *
-    * Two phases: every rewritten day is first materialized into a
-    * `_mutate_tmp_` directory with NOTHING existing touched — so the
-    * refuse-to-empty-the-snapshot guard (and any write failure) aborts
-    * with the snapshot bit-identical — and only then do the
-    * rename-aside swaps and day drops run. Crash debris from a
-    * previous run is swept by [[recoverMutationDebris]] at the
-    * mutation ENTRY points — before the predicate scan, so a day
+    * Two phases: first ONE write of `rewriteDay` over every affected
+    * day, partitioned by `bucket_day`, into the `_mutate_tmp_staging`
+    * root with NOTHING existing touched — a day with no directory in
+    * that output is a dropped day. So the refuse-to-empty-the-snapshot
+    * guard (and any write failure) aborts with the snapshot
+    * bit-identical, and only then do the rename-aside swaps and day
+    * drops run. The Spark job count is fixed, not one write (plus one
+    * emptiness probe) per day. Crash debris from a previous run,
+    * staging root included, is swept by [[recoverMutationDebris]] at
+    * the mutation ENTRY points — before the predicate scan, so a day
     * missing mid-swap is restored before its rows are searched.
     */
   private def rewriteDayPartitions(spark: SparkSession, dest: String,
-      base: Option[String],
-      manifestRows: Seq[(String, Long, Long, String, String)],
+      manifest: Manifest, resolved: DataFrame,
       affected: Seq[String], rewriteDay: DataFrame => DataFrame,
       rowsAffected: Long): MutationReport = {
+    val (base, manifestRows) = manifest
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val resolved = resolve(spark, dest)
+    val staging = new org.apache.hadoop.fs.Path(destPath, MutateStaging)
 
-    // phase 1 — materialize: compute every affected day into its tmp
-    // dir (or mark it dropped); the snapshot itself is untouched
-    val rewritten = Seq.newBuilder[String]
-    val dropped = Seq.newBuilder[String]
-    affected.foreach { day =>
-      val dayDf = rewriteDay(resolved.filter(col("bucket_day") === day))
-        .drop("bucket_day")
-      if (dayDf.isEmpty) dropped += day
-      else {
-        val tmp = new org.apache.hadoop.fs.Path(destPath, s"_mutate_tmp_bucket_day=$day")
-        dayDf.write.mode("overwrite").parquet(tmp.toString)
-        fs.listStatus(tmp).map(_.getPath)
-          .filterNot(p => p.getName.endsWith(".parquet") || p.getName.startsWith("part-"))
-          .foreach(p => fs.delete(p, false))
-        rewritten += day
-      }
-    }
-    val rewrittenDays = rewritten.result()
-    val droppedDays = dropped.result()
+    // phase 1 — materialize: every affected day's rewrite in one
+    // partitioned write; the snapshot itself is untouched
+    rewriteDay(resolved.filter(col("bucket_day").isin(affected: _*)))
+      .write.mode("overwrite").partitionBy("bucket_day").parquet(staging.toString)
+    val staged =
+      if (!fs.exists(staging)) Set.empty[String]
+      else fs.listStatus(staging).map(_.getPath.getName)
+        .collect { case n if n.startsWith("bucket_day=") => n.stripPrefix("bucket_day=") }
+        .toSet
+    val (rewrittenDays, droppedDays) = affected.partition(staged)
     if ((manifestRows.map(_._1).toSet -- droppedDays).isEmpty) {
       // refuse BEFORE anything is destroyed — the guard must protect
       // the data, not lament it
-      rewrittenDays.foreach { day =>
-        fs.delete(new org.apache.hadoop.fs.Path(destPath, s"_mutate_tmp_bucket_day=$day"), true)
-      }
+      fs.delete(staging, true)
       throw new IllegalArgumentException(
         s"mutation would delete every row of $dest — refusing to leave an empty snapshot")
     }
@@ -527,7 +571,7 @@ object Snapshot {
     // copy-on-write), delete the emptied days
     rewrittenDays.foreach { day =>
       val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
-      val tmp = new org.apache.hadoop.fs.Path(destPath, s"_mutate_tmp_bucket_day=$day")
+      val tmp = new org.apache.hadoop.fs.Path(staging, s"bucket_day=$day")
       val old = new org.apache.hadoop.fs.Path(destPath, s"_mutate_old_bucket_day=$day")
       if (fs.exists(dayDir) && !fs.rename(dayDir, old))
         throw new java.io.IOException(s"mutation swap failed for $dayDir (set-aside)")
@@ -541,6 +585,7 @@ object Snapshot {
       val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
       if (fs.exists(dayDir)) fs.delete(dayDir, true)
     }
+    fs.delete(staging, true)
 
     // re-digest ONLY the rewritten days from the read-back (they are
     // all local dirs now) — write-then-verify, like backup()
@@ -783,6 +828,10 @@ object Snapshot {
     */
   private val SchemaDir = "_graft_schema"
 
+  /** The schema log's fixed schema (its only writer is [[writeSchemaLog]]). */
+  private val SchemaLogSchema = StructType.fromDDL(
+    "ord BIGINT, action STRING, name STRING, default_sql STRING, data_type STRING")
+
   /** `ALTER TABLE … ADD COLUMN name type DEFAULT expr` — metadata-only,
     * exactly ClickHouse's semantics: NO data file is touched; existing
     * rows surface the default at read time ([[readEvolved]]), and the
@@ -845,8 +894,7 @@ object Snapshot {
       : Seq[(Long, String, String, String, String)] =
     try {
       graft.AtomicDir.recover(s"$dest/$SchemaDir")
-      spark.read.parquet(s"$dest/$SchemaDir")
-        .select("ord", "action", "name", "default_sql", "data_type")
+      spark.read.schema(SchemaLogSchema).parquet(s"$dest/$SchemaDir")
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getString(4)))
@@ -884,15 +932,13 @@ object Snapshot {
     graft.AtomicDir.swap(dir)
   }
 
-  /** (base path if incremental, per-day rows (day, n, xor, sum, source));
-    * None when the directory has no manifest (a bare parquet dataset).
+  /** The [[Manifest]] of `dir`; None when the directory has no manifest
+    * (a bare parquet dataset). One Spark job: the schema is known.
     */
-  private def readManifest(spark: SparkSession, dir: String)
-      : Option[(Option[String], Seq[(String, Long, Long, String, String)])] =
+  private def readManifest(spark: SparkSession, dir: String): Option[Manifest] =
     try {
       graft.AtomicDir.recover(s"$dir/$ManifestDir")
-      val rows = spark.read.parquet(s"$dir/$ManifestDir")
-        .select("bucket_day", "n_rows", "content_xor", "content_sum", "source", "base_path")
+      val rows = spark.read.schema(ManifestSchema).parquet(s"$dir/$ManifestDir")
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
           r.getString(4), Option(r.getString(5))))
