@@ -1,23 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Whole-suite timer over [[Run]]: per-query medians, two JSON lines on
+  * stdout, the full record in a file, exit 1 when any query failed.
+  */
 object Bench {
+  // 1-minute loadavg, sampled by the cooldown gate and before each run.
+  private def loadavg(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split("\\s+")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Per-query MEDIANS over N runs. Default 3: a one-shot number on a
-    // shared host records the noisy neighbor, not the engine — the r6
-    // one-shot artifact recorded a 131× contention tail on one query
-    // that its own 3-run medians showed at 0.68 s. Host noise here is
-    // ±15% run to run; median-of-3 is the cheapest robust default, and
-    // the per-run loadavg below makes a contaminated run
-    // self-identifying. Set to 1 only for quick iteration.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    // 1-minute loadavg (shared with the stamping below).
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     // Loadavg-cooldown gate (same discipline as tools/scale30.py
     // wait_quiet, adopted per the r11 lesson: BENCH_r11 was recorded at
     // loadavg ~3 and inflated every shared-query diff 1.32x uniformly).
@@ -35,59 +28,49 @@ object Bench {
     val cooldownSec = (System.currentTimeMillis() - cdStart) / 1000
     if (loadavg() >= cooldownLoad)
       System.err.println(f"[bench] cooldown TIMED OUT at loadavg ${loadavg()}%.2f — recording anyway")
-    val spark = Graft.builder("graft-bench", Some(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup at the smallest scale factor: JIT the Spark stack,
-    // compile the common codegen shapes, read table footers — standard
-    // steady-state benchmarking (the first query otherwise absorbs ~5 s
-    // of one-time JVM warmup regardless of which query it is). The
-    // timed loop below still pays each query's own planning + codegen.
-    val t0w = System.nanoTime()
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    val warmup = (System.nanoTime() - t0w) / 1e9
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
+    val spark = Run.session("graft-bench")
+    val code = try report(spark, SparkEntry.queries, only, Run.runs, outPath, cooldownSec)
+      finally spark.stop()
+    if (code != 0) sys.exit(code)
+  }
+
+  /** Times the selected queries `runs` times, prints the two JSON lines,
+    * writes `outPath`, and returns the exit code: 1 when any query failed.
+    */
+  def report(spark: SparkSession, queries: Map[String, Run.Query], only: Set[String],
+      runs: Int, outPath: String, cooldownSec: Long): Int = {
+    val sfDir = Run.sfDir
+    val warmup = Run.warmup(spark, "bench")
+    // A loadavg recorded at 60 on a 32-core host is measuring the
+    // neighbors, not the engine — stamping it into the artifact makes
+    // contamination visible to any reader instead of silently
+    // inflating the record.
+    val loads = scala.collection.mutable.ArrayBuffer[Double]()
     // noop sink, not count(): count() lets Catalyst prune every
     // computed column (a projection-heavy query would "run" in the
     // time of a row count); noop materializes the full result.
-    // Optional comma-separated name filter: time just the queries under
-    // investigation instead of the whole suite (iteration mode; the
-    // driver never sets it, so per-round invocations are unchanged).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // 1-minute loadavg, sampled before each run: a number recorded at
-    // loadavg 60 on a 32-core host is measuring the neighbors, not the
-    // engine — stamping it into the artifact makes contamination
-    // visible to any reader instead of silently inflating the record.
-    // A query that throws keeps no timing: its time up to the throw
-    // would read as a (fast) result. Its name goes to `failed` instead.
-    val failed = scala.collection.mutable.SortedSet[String]()
-    def timedLoop(): Map[String, Double] =
-      SparkEntry.queries.toSeq.filter(q => only.forall(_(q._1)))
-        .sortBy(_._1).flatMap { case (name, fn) =>
+    val (perRun, failures) = (1 to runs).map { _ =>
+      loads += loadavg()
+      val (times, failed) = Run.loop(spark, sfDir, queries, only, "bench") { (_, build) =>
         val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: $e")
-            failed += name
-            None
-        }
-      }.toMap
-    val loads = scala.collection.mutable.ArrayBuffer[Double]()
-    val perRun = (1 to runs).map { _ => loads += loadavg(); timedLoop() }
+        build().write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      (times.toMap, failed.keySet)
+    }.unzip
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
     }
     // a query that failed in any run is in no median and not in the total
+    val failed = failures.flatten.toSet
     val results = perRun.flatMap(_.keySet).toSet.diff(failed).map { name =>
       name -> median(perRun.map(_(name)))
     }.toMap
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.toSeq.sorted.map(Run.json).mkString("[", ",", "]")
     // ms precision on the printed line: the driver captures only the
     // tail of our stdout, and at 100+ queries a full-double-precision
     // map overflows that window and truncates the line's head (the r03
@@ -102,9 +85,8 @@ object Bench {
     def r3(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal.toPlainString
     val loadsJson = loads.map(r3).mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"failed":$failedJson,"queries":${fmtQ(results, 3)},"sf":"$sfDir"}"""
-    println(line)
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"failed":$failedJson"""
+    println(s"""$head,"queries":${fmtQ(results, 3)},"sf":"$sfDir"}""")
     // machine-readable medians file (SPARK_GRAFT_BENCH_OUT): the
     // regression baseline the next round diffs against — per-query
     // medians plus every raw run for outlier forensics. ALWAYS also
@@ -114,8 +96,7 @@ object Bench {
     // complete per-query map for the round artifact.
     val runsJson = perRun.map(m => fmtQ(m)).mkString("[", ",", "]")
     val fullJson =
-      s"""{"sf":"$sfDir","cpus":$cpus,"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"total_of_medians":$total,"medians":${fmtQ(results)},"per_run":$runsJson}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
+      s"""{"sf":"$sfDir","cpus":${Run.cpus},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"total_of_medians":$total,"medians":${fmtQ(results)},"per_run":$runsJson}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), fullJson)
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath failed: $e") }
     // the LAST stdout line fits the driver's 2000-char tail whole: the
@@ -123,9 +104,7 @@ object Bench {
     // the complete map — so the round artifact always parses even
     // though the full per-query line above overflows the window.
     val slowest = results.toSeq.sortBy(-_._2).take(10).toMap
-    println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","warmup_sec":${r3(warmup)},"runs":$runs,"cooldown_sec":$cooldownSec,"loadavg":$loadsJson,"failed":$failedJson,"n_queries":${results.size},"slowest":${fmtQ(slowest, 3)},"queries_file":"$outPath","sf":"$sfDir"}""")
-    spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    println(s"""$head,"n_queries":${results.size},"slowest":${fmtQ(slowest, 3)},"queries_file":"$outPath","sf":"$sfDir"}""")
+    if (failed.nonEmpty) 1 else 0
   }
 }

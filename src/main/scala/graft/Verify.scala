@@ -1,45 +1,33 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: `runMain graft.Verify <sfDir> <outDir>
+  * [<name> ...]` writes each selected query's result to `<outDir>/<name>`
+  * as parquet, its oracle SQL to oracle_sql.json for the DuckDB compare,
+  * and every query that threw to failed.json (name → message) for
+  * tools/check.py. Exits 0 when queries fail: the compare is the gate.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional trailing args: restrict to these query names (local
-    // iteration on a few queries without a full 185-query dump)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.builder("graft-verify", Some(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session("graft-verify")
+    try dump(spark, SparkEntry.queries, SparkEntry.oracleSql, sfDir, outDir, args.drop(2).toSet)
+    finally spark.stop()
+  }
+
+  def dump(spark: SparkSession, queries: Map[String, Run.Query], oracleSql: Map[String, String],
+      sfDir: String, outDir: String, only: Set[String]): Run.Failures = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val (_, failed) = Run.loop(spark, sfDir, queries, only, "verify") { (name, build) =>
+      // removed first: a query that throws before its write starts
+      // would otherwise leave an earlier run's result for the compare
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+      build().coalesce(1).write.mode("overwrite").parquet(dir.toString)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val oracle = oracleSql.filter { case (k, _) => only.isEmpty || only(k) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Run.jsonObject(oracle))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), Run.jsonObject(failed))
+    failed
   }
 }

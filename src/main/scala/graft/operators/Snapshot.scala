@@ -35,6 +35,22 @@ object Snapshot {
     */
   private[graft] type Manifest = (Option[String], Seq[(String, Long, Long, String, String)])
 
+  /** The `_`-named sidecar `name` of snapshot `dest` (after crash
+    * recovery) read with its fixed schema; None when it has no part
+    * file. The read names the part files, not the sidecar's root:
+    * Spark flags a root whose last component starts with `_` as hidden
+    * and logs "All paths were ignored" on every read of it, though it
+    * reads the files; and a glob root logs a missing-metadata warning.
+    */
+  private def readSidecar(spark: SparkSession, dest: String, name: String,
+      schema: StructType): Option[DataFrame] = {
+    graft.AtomicDir.recover(s"$dest/$name")
+    val glob = new org.apache.hadoop.fs.Path(s"$dest/$name/part-*")
+    val parts = Option(glob.getFileSystem(spark.sessionState.newHadoopConf()).globStatus(glob))
+      .toSeq.flatten.map(_.getPath.toString).sorted
+    if (parts.isEmpty) None else Some(spark.read.schema(schema).parquet(parts: _*))
+  }
+
   /** Per-day-partition content digest: row count + XOR and
     * overflow-free decimal SUM of the per-row `xxhash64` over all data
     * columns (column order fixed by sorting names, so the digest is
@@ -438,14 +454,9 @@ object Snapshot {
     * where ClickHouse's are queued). Pure metadata, AtomicDir-swapped
     * like the manifest; model-scale by construction.
     */
-  def mutations(spark: SparkSession, dest: String): DataFrame = {
-    graft.AtomicDir.recover(s"$dest/$MutationsDir")
-    try spark.read.schema(MutationsSchema).parquet(s"$dest/$MutationsDir")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema)
-    }
-  }
+  def mutations(spark: SparkSession, dest: String): DataFrame =
+    readSidecar(spark, dest, MutationsDir, MutationsSchema).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema))
 
   private def logMutation(spark: SparkSession, dest: String, command: String,
       predicate: String, r: MutationReport): Unit = {
@@ -892,14 +903,10 @@ object Snapshot {
 
   private def readSchemaLog(spark: SparkSession, dest: String)
       : Seq[(Long, String, String, String, String)] =
-    try {
-      graft.AtomicDir.recover(s"$dest/$SchemaDir")
-      spark.read.schema(SchemaLogSchema).parquet(s"$dest/$SchemaDir")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4)))
-        .sortBy(_._1).toSeq
-    } catch { case _: org.apache.spark.sql.AnalysisException => Nil }
+    readSidecar(spark, dest, SchemaDir, SchemaLogSchema).toSeq.flatMap(_.collect())
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4)))
+      .sortBy(_._1)
 
   private def writeSchemaLog(spark: SparkSession, dest: String,
       rows: Seq[(Long, String, String, String, String)]): Unit = {
@@ -936,16 +943,14 @@ object Snapshot {
     * (a bare parquet dataset). One Spark job: the schema is known.
     */
   private def readManifest(spark: SparkSession, dir: String): Option[Manifest] =
-    try {
-      graft.AtomicDir.recover(s"$dir/$ManifestDir")
-      val rows = spark.read.schema(ManifestSchema).parquet(s"$dir/$ManifestDir")
-        .collect()
+    readSidecar(spark, dir, ManifestDir, ManifestSchema).map { df =>
+      val rows = df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
           r.getString(4), Option(r.getString(5))))
       val bases = rows.flatMap(_._6).distinct
       require(bases.length <= 1, s"manifest at $dir names multiple bases: ${bases.mkString(",")}")
-      Some((bases.headOption, rows.map(r => (r._1, r._2, r._3, r._4, r._5)).toSeq))
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+      (bases.headOption, rows.map(r => (r._1, r._2, r._3, r._4, r._5)).toSeq)
+    }
 
   /** RESTORE analog: read the snapshot back (schema from parquet
     * footers — the engine is schema-dynamic like the reference, which

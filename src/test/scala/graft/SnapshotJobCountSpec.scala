@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
 /** Spark jobs per snapshot statement. A statement's latency on a small
   * snapshot is mostly fixed cost per job, so the job count must not
   * grow with the number of days a mutation touches, and a chain's
-  * restore must read each manifest once.
+  * restore must read each manifest once. Sidecar reads name part
+  * files, so Spark never flags their root as a hidden path.
   */
 class SnapshotJobCountSpec extends SparkSpec {
 
@@ -61,6 +62,27 @@ class SnapshotJobCountSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The directory a relation root reads: a part file's parent. */
+  private def readDir(root: String): String = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    (if (p.getName.startsWith("part-")) p.getParent else p).toString
+  }
+
+  test("sidecar reads name no root that Spark treats as hidden") {
+    val dest = freshSnapshot("graft-jobs-sidecar")
+    val (_, _, roots) = observe {
+      Snapshot.delete(spark, dest, col("event_type") === "click")
+      Snapshot.delete(spark, dest, col("event_type") === "error") // reads the mutation log
+      Snapshot.addColumn(spark, dest, "note", "'n/a'", "string")
+      Snapshot.readEvolved(spark, dest).count()
+    }
+    val sidecars = Seq("_graft_manifest", "_graft_mutations", "_graft_schema")
+    assert(sidecars.forall(s => roots.exists(readDir(_).endsWith(s"/$s"))),
+      s"manifest, mutation log and schema log must each be read: $roots")
+    val hidden = roots.filter(r => new org.apache.hadoop.fs.Path(r).getName.startsWith("_"))
+    assert(hidden.isEmpty, s"roots Spark logs as ignored: $hidden")
+  }
+
   test("DELETE starts as many jobs for one affected day as for every day") {
     assert(days.length > 2, "fixture must span several days")
     val clicks = col("event_type") === "click"
@@ -99,7 +121,7 @@ class SnapshotJobCountSpec extends SparkSpec {
     val (rows, _, roots) = observe(
       Graft.sql(spark, s"RESTORE TABLE ev_chain_jobs FROM '$top'").count())
     assert(rows == src.count())
-    val manifestReads = roots.filter(_.endsWith("/_graft_manifest"))
+    val manifestReads = roots.map(readDir).filter(_.endsWith("/_graft_manifest"))
       .groupBy(_.stripSuffix("/_graft_manifest")).map { case (d, rs) => d -> rs.size }
     def reads(dir: String): Int = manifestReads.collectFirst {
       case (d, n) if d.endsWith(new java.io.File(dir).getCanonicalPath) => n

@@ -2,6 +2,8 @@
 """Local replica of the driver's correctness gate: run graft.Verify
 first, then this script compares each query's parquet result against
 its DuckDB oracle (columns sorted by name, row-order-sensitive values).
+Every query named in Verify's failed.json is a FAIL too, with or
+without oracle SQL: it threw, so any result on disk is not its own.
 Usage: python3 tools/check.py [sfDir] [outDir] [only_query ...]
 """
 import duckdb, json, sys
@@ -18,9 +20,11 @@ for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
-fails = []
+failed = {k: v for k, v in json.load(open(f"{out}/failed.json")).items()
+          if not only or k in only}
+fails = [(name, f"threw in graft.Verify: {why}") for name, why in sorted(failed.items())]
 for name in sorted(oracle):
-    if only and name not in only:
+    if (only and name not in only) or name in failed:
         continue
     sql = oracle[name]
     try:
@@ -56,5 +60,7 @@ for name in sorted(oracle):
 
 for name, why in fails:
     print(f"FAIL {name}: {why}")
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} oracle-checked queries pass")
+n_fail = sum(1 for name, _ in fails if name in oracle)
+print(f"\n{len(oracle) - n_fail}/{len(oracle)} oracle-checked queries pass")
+print(f"{len(failed)} queries threw in graft.Verify")
 sys.exit(1 if fails else 0)
