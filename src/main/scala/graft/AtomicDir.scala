@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** Crash-safe directory swap for standing state maintained by
   * write-new-then-swap loops ([[streaming.ProjectionStream]],
   * [[streaming.MomentsStream]], [[pipeline.IndexLifecycle]], the
-  * snapshot manifest). A naive delete-then-rename has a window where
+  * snapshot sidecars), and the one commit of every day-level snapshot
+  * verb ([[operators.Snapshot]]). A naive delete-then-rename has a window where
   * NO standing directory exists: a crash there makes the next run
   * treat the state as empty and silently drop every previously
   * accumulated partial.
@@ -19,30 +20,30 @@ import org.apache.spark.sql.SparkSession
   * scheme all take the identical code path ([[PortableFsSpec]] drives
   * the battery through a non-`file:` scheme end to end).
   *
-  * Two protocols, chosen by when the crash is discovered:
+  * One commit of N staged→live moves ([[commit]]; [[swap]] is its
+  * one-move case, `dest.tmp` → `dest` under marker `dest.commit`):
   *
-  * '''Rename protocol''' (steps; safe wherever directory rename is
-  * atomic — local FS, HDFS):
-  *
-  *   1. create marker `dest.commit`  (THE commit point: one small
-  *      file create — atomic even on object stores)
-  *   2. rename dest   -> dest.old    (old state still recoverable)
-  *   3. rename tmp    -> dest        (new state live)
-  *   4. delete dest.old              (cleanup only)
-  *   5. delete marker
+  *   1. create the marker listing every (staged, live) move
+  *      (THE commit point: one small file create — atomic even on
+  *      object stores)
+  *   2. per move: delete live (a swap renames it to `dest.old`), then
+  *      rename staged -> live
+  *   3. delete the set-aside `dest.old`, then the marker (cleanup only)
   *
   * [[recover]] rolls a crash at any window to a deterministic winner:
-  * marker present ⇒ the fully-written tmp was committed, so it (or
-  * the dest it already became) wins and any partial/old state drops;
-  * marker absent ⇒ the swap never committed, so the old state wins
-  * and an uncommitted tmp drops. On a store whose rename is
-  * copy+delete (no atomicity), the marker is what keeps the outcome
+  * marker present ⇒ the fully-written staged side was committed, so it
+  * (or the live path it already became) wins and any partial/old state
+  * drops; marker absent ⇒ nothing committed, so the old state wins and
+  * uncommitted staging drops. On a store whose rename is copy+delete
+  * (no atomicity), the marker is what keeps the outcome
   * deterministic: a torn rename can leave both halves, and the marker
   * says which half is authoritative. Callers run [[recover]] before
   * every read of the standing directory; a CLEAN directory (no
   * marker, no tmp, no old) returns immediately WITHOUT consulting the
   * writer lock, so readers are fenced only during the actual swap
-  * windows, never for the length of a compute tick.
+  * windows, never for the length of a compute tick. A commit staged
+  * in its own directory (the snapshot verbs' `_graft_txn/`) recovers
+  * through [[recoverStaged]].
   *
   * '''Writer lease''' (`dest.lock`): the crash windows above assume ONE
   * writer at a time, but the reference's scheduler happily overlaps
@@ -71,7 +72,7 @@ import org.apache.spark.sql.SparkSession
   *     holder's token — a lease that expired mid-tick and was broken
   *     by the next writer is never deleted out from under that
   *     writer (which would have admitted a third).
-  *   - [[swap]] re-verifies ownership at the COMMIT POINT and renews
+  *   - [[commit]] re-verifies ownership at the COMMIT POINT and renews
   *     the expiry while it still holds it ([[LeaseLostException]]
   *     aborts the tick BEFORE any rename if the lease was lost), so a
   *     tick that outlives its TTL fails cleanly instead of
@@ -95,7 +96,7 @@ object AtomicDir {
   /** The staging path callers write the new state to. */
   def tmpPath(dest: String): String = dest + ".tmp"
 
-  private def markerPath(dest: String) = new Path(dest + ".commit")
+  private def markerPath(dest: String) = dest + ".commit"
 
   private def lockPath(dest: String) = new Path(dest + ".lock")
 
@@ -168,6 +169,13 @@ object AtomicDir {
       case _: java.io.IOException => None // vanished mid-read: same as absent
     }
 
+  private def writeLock(fs: FileSystem, lock: Path, ttlMs: Long, token: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(lock, overwrite)
+    try out.write((System.currentTimeMillis() + ttlMs + "\n" + token).getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** Break an expired lock ATOMICALLY: rename it to a breaker-unique
     * name; only the contender whose rename succeeds has broken it (and
     * deletes the set-aside). Returns whether THIS caller was the
@@ -210,13 +218,8 @@ object AtomicDir {
       if (attempts > 100)
         throw new java.io.IOException(s"livelock acquiring lease on $dest")
       val created = jvmGate.synchronized {
-        try {
-          val out = fs.create(lock, false)
-          out.write((System.currentTimeMillis() + ttlMs + "\n" + token)
-            .getBytes("UTF-8"))
-          out.close()
-          true
-        } catch {
+        try { writeLock(fs, lock, ttlMs, token, overwrite = false); true }
+        catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
           case _: java.io.IOException if fs.exists(lock) => false
         }
@@ -275,11 +278,7 @@ object AtomicDir {
       throw new IllegalStateException(s"verifyAndRenew outside withLease for $dest"))
     val lock = lockPath(dest)
     readLock(fs, lock, ttlMs) match {
-      case Some((_, tok)) if tok == token =>
-        val out = fs.create(lock, true)
-        out.write((System.currentTimeMillis() + ttlMs + "\n" + token)
-          .getBytes("UTF-8"))
-        out.close()
+      case Some((_, tok)) if tok == token => writeLock(fs, lock, ttlMs, token, overwrite = true)
       case other =>
         throw new LeaseLostException(
           s"lease on $dest no longer held by this tick (lock=$other) — " +
@@ -310,38 +309,157 @@ object AtomicDir {
     }
   }
 
-  /** Swap the fully-written `dest`.tmp into place over `dest`.
-    * Standalone calls take the writer lease for the swap's duration;
-    * calls inside [[withLease]] ride the caller's lease. Either way the
-    * lease is re-verified (and renewed) immediately before the commit
-    * point — a tick whose lease was broken mid-compute aborts with
-    * [[LeaseLostException]] before touching anything.
+  /** One move of a [[commit]]: `staged` goes live at `live` (None
+    * retires `live`). With an `aside` (a swap's `dest.old`) the old
+    * state waits there until the commit ends; without one it is deleted.
     */
-  def swap(dest: String): Unit = withLease(dest) {
-    val d = new Path(dest)
-    val fs = fsOf(d)
-    val t = new Path(tmpPath(dest))
-    val o = new Path(dest + ".old")
-    val m = markerPath(dest)
-    if (fs.exists(o)) fs.delete(o, true)
+  final case class Move(staged: Option[String], live: String, aside: Option[String] = None)
+
+  /** The one-move commit [[swap]] and [[recover]] run for `dest`. */
+  private def oneMove(dest: String) = Move(Some(tmpPath(dest)), dest, Some(dest + ".old"))
+
+  /** Swap the fully-written `dest`.tmp into place over `dest`: the
+    * one-move [[commit]], under the writer lease (the caller's, inside
+    * [[withLease]]).
+    */
+  def swap(dest: String): Unit =
+    withLease(dest)(commit(markerPath(dest), Seq(oneMove(dest)), Seq(dest)))
+
+  /** THE commit: all `moves` go live, or none does. Each staged path
+    * must be fully written; nothing live changes before the commit
+    * point, one small-file create of the marker that lists the moves.
+    * After it the moves roll forward exactly as [[recover]] would roll
+    * a crash among them forward. Runs inside the caller's [[withLease]]
+    * on every `leases` entry; each is re-verified (and renewed) right
+    * before the marker, so a tick whose lease was broken mid-compute
+    * aborts with [[LeaseLostException]] before touching anything.
+    */
+  private[graft] def commit(marker: String, moves: Seq[Move], leases: Seq[String]): Unit = {
+    val m = new Path(marker)
+    val fs = fsOf(m)
     if (fs.exists(m))
       throw new java.io.IOException(
-        s"swap: unrecovered commit marker at $dest — run recover first")
-    verifyAndRenew(fs, dest, DefaultLeaseTtlMs)
-    // step 1 — commit point: from here the tmp content is authoritative
-    fs.create(m, false).close()
-    if (fs.exists(d) && !fs.rename(d, o)) {
-      fs.delete(m, true)
-      throw new java.io.IOException(s"swap: cannot set aside $dest")
+        s"commit: unrecovered commit marker at $marker — run recover first")
+    moves.foreach { mv =>
+      if (mv.staged.exists(s => !fs.exists(new Path(s))))
+        throw new java.io.IOException(s"commit: nothing staged at ${mv.staged.get}")
+      mv.aside.map(new Path(_)).filter(fs.exists).foreach(fs.delete(_, true)) // stale leftover
     }
-    if (!fs.rename(t, d)) {
-      // roll back: the old state must come back before we fail
-      if (fs.exists(o)) fs.rename(o, d)
-      fs.delete(m, true)
-      throw new java.io.IOException(s"swap failed: $t -> $dest")
+    leases.foreach(l => verifyAndRenew(fileSystem(l), l, DefaultLeaseTtlMs))
+    // the commit point: from here the staged paths are authoritative
+    val out = fs.create(m, false)
+    try out.write(moves.map(mv => Seq(mv.staged, Some(mv.live), mv.aside).map(_.getOrElse(""))
+        .mkString("\t")).mkString("", "\n", "\nend\n").getBytes("UTF-8"))
+    finally out.close()
+    rollForward(fs, m, moves, resumed = false)
+  }
+
+  /** Make every move of the committed marker `m` live, then clean up.
+    * Each step re-reads what a crash may have left, so a rerun from any
+    * point lands the same state. On a copy+delete store a rename can
+    * tear two ways: a partial copy, or a whole copy whose source delete
+    * died part-way. So a `resumed` run keeps a live copy beside its
+    * staged source only when live holds every file the source still
+    * holds, byte for byte (the copy finished; only its source is left
+    * to delete); otherwise live drops and the staged side promotes
+    * again. A fresh run knows live is the old state.
+    */
+  private def rollForward(fs: FileSystem, m: Path, moves: Seq[Move], resumed: Boolean): Unit = {
+    moves.foreach { mv =>
+      val live = new Path(mv.live)
+      val aside = mv.aside.map(new Path(_))
+      mv.staged.map(new Path(_)) match {
+        case None => fs.delete(live, true)
+        case Some(s) if !fs.exists(s) =>
+          // promoted already; if live is gone too, the set-aside copy is
+          // the only one left — surface it rather than nothing
+          aside.filter(a => !fs.exists(live) && fs.exists(a)).foreach(move(fs, _, live))
+        case Some(s) if resumed && fs.exists(live) && holds(fs, live, s) =>
+          fs.delete(s, true)
+        case Some(s) =>
+          // live is the old state or a torn copy: a swap sets it aside
+          // once; a second copy (after a torn set-aside) just drops
+          if (fs.exists(live)) aside.filterNot(fs.exists) match {
+            case Some(a) => move(fs, live, a)
+            case None => fs.delete(live, true)
+          }
+          move(fs, s, live)
+      }
     }
-    if (fs.exists(o)) fs.delete(o, true)
-    fs.delete(m, true)
+    moves.flatMap(_.aside).map(new Path(_)).filter(fs.exists).foreach(fs.delete(_, true))
+    fs.delete(m, false)
+  }
+
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"commit: cannot move $from -> $to")
+
+  /** Whether directory `live` holds every file under `staged`, at the
+    * same relative path and byte for byte. A listing walk, not
+    * `listFiles` (see [[operators.Snapshot.zipDirectory]]).
+    */
+  private def holds(fs: FileSystem, live: Path, staged: Path): Boolean =
+    fs.listStatus(staged).forall { st =>
+      val l = new Path(live, st.getPath.getName)
+      if (st.isDirectory) fs.exists(l) && holds(fs, l, st.getPath)
+      else fs.exists(l) && fs.getFileStatus(l).getLen == st.getLen && sameBytes(fs, st.getPath, l)
+    }
+
+  private def sameBytes(fs: FileSystem, a: Path, b: Path): Boolean = {
+    val (x, y) = (fs.open(a), fs.open(b))
+    try {
+      val (bx, by) = (new Array[Byte](1 << 16), new Array[Byte](1 << 16))
+      var (n, same) = (1, true)
+      while (same && n > 0) {
+        n = x.readNBytes(bx, 0, bx.length)
+        same = y.readNBytes(by, 0, by.length) == n && java.util.Arrays.equals(bx, 0, n, by, 0, n)
+      }
+      same
+    } finally { x.close(); y.close() }
+  }
+
+  /** The moves a marker lists; `Some(Nil)` for an empty marker (the
+    * swap's pre-list form: its one move is implied), None when there
+    * is no marker or its write never finished (no `end` line — the
+    * commit point was not reached).
+    */
+  private def readMarker(fs: FileSystem, m: Path): Option[Seq[Move]] = {
+    val text =
+      try { val in = fs.open(m); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
+      catch { case _: java.io.FileNotFoundException => return None }
+    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    if (lines.isEmpty) Some(Nil)
+    else if (lines.last != "end") None
+    else Some(lines.init.map { l =>
+      val Array(staged, live, aside) = l.split("\t", -1)
+      Move(Some(staged).filter(_.nonEmpty), live, Some(aside).filter(_.nonEmpty))
+    })
+  }
+
+  /** Before a repair: fail fast while a LIVE foreign writer holds the
+    * `dest` lease (repair mid-protocol would steal its staging), break
+    * an EXPIRED one (dead holder) atomically, pass when this thread
+    * holds it.
+    */
+  private def fence(fs: FileSystem, dest: String): Unit = {
+    if (held.get.contains(dest)) return
+    val lock = lockPath(dest)
+    var attempts = 0
+    while (true) {
+      attempts += 1
+      if (attempts > 100)
+        throw new java.io.IOException(s"livelock breaking lease in recover($dest)")
+      readLock(fs, lock, DefaultLeaseTtlMs) match {
+        case Some((e, _)) if System.currentTimeMillis() > e =>
+          // same atomic break as acquire: only the renamer proceeds;
+          // a losing rename loops to re-read whatever replaced it
+          if (breakExpired(fs, lock, java.util.UUID.randomUUID().toString)) return
+        case Some((e, _)) =>
+          throw new LeaseHeldException(
+            s"recover($dest): writer lease live until epoch-ms $e — " +
+              "swap in flight, repair would steal its tmp")
+        case None => return
+      }
+    }
   }
 
   /** Repair any half-finished swap at `dest`. Idempotent; call before
@@ -349,77 +467,62 @@ object AtomicDir {
     * no tmp, no set-aside old — returns immediately WITHOUT consulting
     * the writer lock: a lease spans a whole compute tick, and fencing
     * every reader for its duration would turn routine backups into
-    * read outages; only actual swap debris needs the repair (and the
-    * swap windows that produce debris are the brief rename protocol).
-    * With debris present, a LIVE writer lease fails fast with
-    * [[LeaseHeldException]] (repair mid-protocol would steal the
-    * writer's tmp) unless this thread holds the lease; an EXPIRED lock
-    * (dead holder) is broken atomically and the repair proceeds.
+    * read outages. With debris present, [[fence]] decides.
     */
   def recover(dest: String): Unit = {
-    val d = new Path(dest)
-    val fs = fsOf(d)
-    val t = new Path(tmpPath(dest))
-    val o = new Path(dest + ".old")
-    val m = markerPath(dest)
-    if (!fs.exists(m) && !fs.exists(t) && !fs.exists(o)) return
-    if (!held.get.contains(dest)) {
-      val lock = lockPath(dest)
-      var fenced = true
-      var attempts = 0
-      while (fenced) {
-        attempts += 1
-        if (attempts > 100)
-          throw new java.io.IOException(s"livelock breaking lease in recover($dest)")
-        readLock(fs, lock, DefaultLeaseTtlMs) match {
-          case Some((e, _)) if System.currentTimeMillis() > e =>
-            // same atomic break as acquire: only the renamer proceeds;
-            // a losing rename loops to re-read whatever replaced it
-            if (breakExpired(fs, lock,
-                java.util.UUID.randomUUID().toString)) fenced = false
-          case Some((e, _)) =>
-            throw new LeaseHeldException(
-              s"recover($dest): writer lease live until epoch-ms $e — " +
-                "swap in flight, repair would steal its tmp")
-          case None => fenced = false
-        }
-      }
+    val fs = fsOf(new Path(dest))
+    if (Seq(markerPath(dest), tmpPath(dest), dest + ".old").exists(p => fs.exists(new Path(p))))
+      settle(fs, dest, new Path(markerPath(dest)), Seq(oneMove(dest)))
+  }
+
+  /** [[recover]] for a commit staged in directory `txn` (marker
+    * `txn/commit`) under `lease`. Before the marker nothing live has
+    * changed, so uncommitted staging is only discarded, by the lease's
+    * holder (the next writer): a reader leaves it alone, unfenced.
+    * With `touching`, only a committed marker that moves a path under
+    * that directory counts, and nothing is discarded (a link's owner
+    * may since have staged or committed work of its own).
+    */
+  private[graft] def recoverStaged(lease: String, txn: String,
+      touching: Option[String] = None): Unit = {
+    val t = new Path(txn)
+    val fs = fsOf(t)
+    val m = new Path(t, "commit")
+    val committed = readMarker(fs, m)
+      .exists(_.exists(mv => touching.forall(d => mv.live.startsWith(d + "/"))))
+    if (committed || (touching.isEmpty && held.get.contains(lease) && fs.exists(t))) {
+      settle(fs, lease, m, Nil)
+      fs.delete(t, true)
     }
-    if (fs.exists(m)) {
-      // committed: the tmp (or the dest it already became) must win.
-      // A torn copy+delete rename can leave BOTH halves; tmp is the
-      // fully-written original, so while it survives it is the source
-      // of truth and any partial dest drops.
-      if (fs.exists(t)) {
-        if (fs.exists(d)) fs.delete(d, true)
-        if (!fs.rename(t, d))
-          throw new java.io.IOException(s"recover: cannot promote $t -> $dest")
-      } else if (!fs.exists(d)) {
-        // tmp fully consumed but dest absent: the only remaining copy
-        // is the set-aside old state — surface it rather than nothing
-        if (fs.exists(o) && !fs.rename(o, d))
-          throw new java.io.IOException(s"recover: cannot restore $o -> $dest")
-      }
-      if (fs.exists(o)) fs.delete(o, true)
-      fs.delete(m, true)
-    } else {
-      // uncommitted: pre-marker legacy windows (and states written by
-      // the pre-marker protocol) — the old state wins
-      if (!fs.exists(d) && fs.exists(o) && fs.exists(t)) {
-        // crashed between set-aside and promote: the tmp is complete — promote it
-        if (!fs.rename(t, d))
-          throw new java.io.IOException(s"recover: cannot promote $t -> $dest")
-      } else if (!fs.exists(d) && fs.exists(o)) {
-        // tmp lost before going live: restore the old state
-        if (!fs.rename(o, d))
-          throw new java.io.IOException(s"recover: cannot restore $o -> $dest")
-      }
-      // leftovers from a crash before any rename (uncommitted tmp) or
-      // after promote (old not yet deleted) are safe to drop
-      if (fs.exists(d)) {
-        if (fs.exists(o)) fs.delete(o, true)
-        if (fs.exists(t)) fs.delete(t, true)
-      }
+  }
+
+  /** Land a crashed commit on its winner. Marker present: the staged
+    * side won, so every listed move rolls forward. Marker absent (or
+    * torn before its `end` line): nothing committed; the pre-marker
+    * windows of the implied moves (states the pre-marker protocol
+    * could leave) repair to the old state, and stray staging drops.
+    */
+  private def settle(fs: FileSystem, lease: String, m: Path, implied: Seq[Move]): Unit = {
+    fence(fs, lease)
+    readMarker(fs, m) match {
+      case Some(listed) =>
+        rollForward(fs, m, if (listed.isEmpty) implied else listed, resumed = true)
+      case None =>
+        for (mv <- implied; a <- mv.aside) {
+          val (live, aside) = (new Path(mv.live), new Path(a))
+          if (!fs.exists(live) && fs.exists(aside)) {
+            // crashed between set-aside and promote: a complete staged
+            // copy promotes, else the old state restores
+            move(fs, mv.staged.map(new Path(_)).filter(fs.exists).getOrElse(aside), live)
+          }
+          // leftovers of a crash before any rename (uncommitted tmp) or
+          // after promote (old not yet deleted) are safe to drop
+          if (fs.exists(live)) {
+            fs.delete(aside, true)
+            mv.staged.foreach(s => fs.delete(new Path(s), true))
+          }
+        }
+        fs.delete(m, false)
     }
   }
 }

@@ -27,14 +27,4 @@ object Vectors {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Squared L2 distance — cheaper than cosine when vectors are
-    * pre-normalized (monotonic in cosine).
-    */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0), (acc, x) => acc + x)
 }

@@ -113,6 +113,10 @@ object BackupLoop {
         .coalesce(1).write.mode("overwrite").parquet(s"$dest/$LatestDir")
   }
 
+  private def latest(spark: SparkSession, dest: String): DataFrame =
+    Snapshot.readSidecar(spark, dest, LatestDir)
+      .getOrElse(throw new IllegalStateException(s"no latest pointer at $dest"))
+
   /** Read the latest pointer back: the materialized copy under
     * `hardlink`; the dereferenced day view under `symlink` (throws on
     * a dangling pointer — the day was GC'd — like a broken symlink).
@@ -120,10 +124,9 @@ object BackupLoop {
   def readLatest(spark: SparkSession, dest: String,
       mode: Retention.LatestMode): Option[DataFrame] = mode match {
     case Retention.LatestMode.Off => None
-    case Retention.LatestMode.Hardlink =>
-      Some(spark.read.parquet(s"$dest/$LatestDir"))
+    case Retention.LatestMode.Hardlink => Some(latest(spark, dest))
     case Retention.LatestMode.Symlink =>
-      val day = spark.read.parquet(s"$dest/$LatestDir").head.getString(0)
+      val day = latest(spark, dest).head.getString(0)
       val view = Snapshot.dayView(Snapshot.restore(spark, dest), day)
       require(view.limit(1).count() > 0,
         s"dangling latest pointer at $dest: day $day was GC'd")

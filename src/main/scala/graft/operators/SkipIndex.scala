@@ -76,11 +76,8 @@ object SkipIndex {
     graft.AtomicDir.swap(dir)
   }
 
-  private def sidecar(spark: SparkSession, dest: String): Option[DataFrame] = {
-    graft.AtomicDir.recover(s"$dest/$SidecarDir")
-    try Some(spark.read.parquet(s"$dest/$SidecarDir"))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
-  }
+  private def sidecar(spark: SparkSession, dest: String): Option[DataFrame] =
+    Snapshot.readSidecar(spark, dest, SidecarDir)
 
   /** Days the scan may SKIP for `keep`: consult the sidecar, drop
     * days whose index row proves no match — but only where the day's

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.AtomicDir
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The backup/restore loop itself (layer [R]): `BACKUP DATABASE … TO
   * Disk` (backup.sh:45) with the post-write validation of
@@ -22,12 +24,12 @@ object Snapshot {
     * with `_` are invisible to Spark's file index, so a plain
     * `spark.read.parquet(dest)` of the data never picks it up.
     */
-  private val ManifestDir = "_graft_manifest"
+  private[graft] val ManifestDir = "_graft_manifest"
 
-  /** The manifest's fixed schema (its only writer is [[writeManifest]]):
+  /** The manifest's fixed schema (its only writer is [[manifestDf]]):
     * reads pass it explicitly, so none starts a schema-inference job.
     */
-  private val ManifestSchema = StructType.fromDDL("bucket_day STRING, " +
+  private[graft] val ManifestSchema = StructType.fromDDL("bucket_day STRING, " +
     "n_rows BIGINT, content_xor BIGINT, content_sum STRING, source STRING, base_path STRING")
 
   /** A manifest as read: the base path if the snapshot is incremental,
@@ -35,20 +37,37 @@ object Snapshot {
     */
   private[graft] type Manifest = (Option[String], Seq[(String, Long, Long, String, String)])
 
-  /** The `_`-named sidecar `name` of snapshot `dest` (after crash
-    * recovery) read with its fixed schema; None when it has no part
-    * file. The read names the part files, not the sidecar's root:
-    * Spark flags a root whose last component starts with `_` as hidden
-    * and logs "All paths were ignored" on every read of it, though it
-    * reads the files; and a glob root logs a missing-metadata warning.
+  /** Staging directory of a snapshot commit ([[commitTxn]]). Spark's
+    * file index skips a `_` name only when it has no `=`
+    * (`HadoopFSUtils.shouldFilterOutPathName`), so this name hides all
+    * under it, where a root-level `_…bucket_day=…` would be a partition.
     */
-  private def readSidecar(spark: SparkSession, dest: String, name: String,
-      schema: StructType): Option[DataFrame] = {
-    graft.AtomicDir.recover(s"$dest/$name")
-    val glob = new org.apache.hadoop.fs.Path(s"$dest/$name/part-*")
-    val parts = Option(glob.getFileSystem(spark.sessionState.newHadoopConf()).globStatus(glob))
+  private[graft] val TxnDir = "_graft_txn"
+
+  /** In a MOVE source's `_graft_txn/`: names the destination it commits with. */
+  private val LinkFile = "link"
+
+  private def dayDir(dest: String, day: String) = s"$dest/bucket_day=$day"
+
+  private def stagedDay(dest: String, day: String) = s"$dest/$TxnDir/data/bucket_day=$day"
+
+  /** The `_`-named sidecar `name` of `dest` (after crash recovery of
+    * the snapshot and of the sidecar's own swap), read with `schema`
+    * when it is fixed; None when it has no part file.
+    * The read names the part files, not the sidecar's root: Spark flags
+    * a root whose last component starts with `_` as hidden and logs
+    * "All paths were ignored" on every read of it, though it reads the
+    * files; and a glob root logs a missing-metadata warning.
+    */
+  private[graft] def readSidecar(spark: SparkSession, dest: String, name: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
+    recoverTxn(dest)
+    AtomicDir.recover(s"$dest/$name")
+    val glob = new Path(s"$dest/$name/part-*")
+    val parts = Option(AtomicDir.fileSystem(dest).globStatus(glob))
       .toSeq.flatten.map(_.getPath.toString).sorted
-    if (parts.isEmpty) None else Some(spark.read.schema(schema).parquet(parts: _*))
+    if (parts.isEmpty) None
+    else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(parts: _*))
   }
 
   /** Per-day-partition content digest: row count + XOR and
@@ -77,7 +96,7 @@ object Snapshot {
     * that incremental backups diff against — validation and manifest
     * cost one pass together. Returns the verified row count.
     */
-  def backup(df: DataFrame, ts: Column, dest: String): Long = graft.AtomicDir.withLease(dest) {
+  def backup(df: DataFrame, ts: Column, dest: String): Long = AtomicDir.withLease(dest) {
     // writer lease on the snapshot itself: two overlapping backups of
     // one destination — the go-cron fork-regardless schedule
     // (init.sh:14), whether both arrive via the Scala API, the SQL-text
@@ -88,15 +107,14 @@ object Snapshot {
     // an empty write leaves no readable footers — that IS the failure
     // mode the reference's [ -f FILE ] check catches (backup.sh:47–52)
     val dig =
-      try digest(restore(df.sparkSession, dest)).collect()
-      catch { case _: org.apache.spark.sql.AnalysisException => Array.empty[org.apache.spark.sql.Row] }
-    val actual = dig.map(_.getLong(1)).sum
+      try digestScan(restore(df.sparkSession, dest))
+      catch { case _: org.apache.spark.sql.AnalysisException => Nil }
+    val actual = dig.map(_._2).sum
     require(actual == expected,
       s"snapshot validation failed: wrote $expected rows, read back $actual (dest=$dest)")
     require(actual > 0, s"snapshot validation failed: empty snapshot at $dest")
-    writeManifest(df.sparkSession, dest, dig.map { r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getDecimal(3).toString, "full", null: String)
-    })
+    writeSidecar(dest, ManifestDir,
+      manifestDf(df.sparkSession, (None, dig.map { case (d, n, x, s) => (d, n, x, s, "full") })))
     actual
   }
 
@@ -131,16 +149,14 @@ object Snapshot {
     * against — no re-read of the manifest just written.
     */
   private[graft] def backupIncrementalReport(df: DataFrame, ts: Column, baseDir: String,
-      dest: String): IncrementalReport = graft.AtomicDir.withLease(dest) {
+      dest: String): IncrementalReport = AtomicDir.withLease(dest) {
     val spark = df.sparkSession
     val (_, baseRows) = readManifest(spark, baseDir).getOrElse(
       throw new IllegalArgumentException(
         s"base snapshot at $baseDir has no manifest — re-run Snapshot.backup on it"))
     val baseDig = baseRows.map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val cur = df.withColumn("bucket_day", Retention.bucketDay(ts))
-    val curDig = digest(cur).collect().map { r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getDecimal(3).toString)
-    }.sortBy(_._1)
+    val curDig = digestScan(cur).sortBy(_._1)
     require(curDig.nonEmpty, s"snapshot validation failed: empty snapshot at $dest")
     val changed = curDig.collect {
       case (day, n, x, s) if !baseDig.get(day).contains((n, x, s)) => day
@@ -150,15 +166,13 @@ object Snapshot {
       // predicate the writer uses to re-scan only the changed days
       cur.filter(col("bucket_day").isin(changed: _*))
         .write.mode("overwrite").partitionBy("bucket_day").parquet(dest)
-    writeManifest(spark, dest, curDig.map { case (day, n, x, s) =>
-      (day, n, x, s, if (changed.contains(day)) "delta" else "base", baseDir)
-    })
+    writeSidecar(dest, ManifestDir, manifestDf(spark, (Some(baseDir), curDig.map {
+      case (day, n, x, s) => (day, n, x, s, if (changed.contains(day)) "delta" else "base")
+    })))
     // fail-fast validation, digest-deep like the reference's post-write
     // check: the RESOLVED view (delta ∪ pruned base) must reproduce the
     // current per-day digests exactly
-    val resolved = digest(resolve(spark, dest)).collect().map { r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getDecimal(3).toString)
-    }.sortBy(_._1)
+    val resolved = digestScan(resolve(spark, dest)).sortBy(_._1)
     require(resolved.sameElements(curDig),
       s"incremental snapshot validation failed: resolved view diverges from source (dest=$dest)")
     IncrementalReport(changed.length, curDig.length, curDig.map(_._2).sum)
@@ -239,27 +253,19 @@ object Snapshot {
     * data (run gc root-first with windows no tighter than the
     * dependents').
     */
-  def gc(spark: SparkSession, dest: String, keepDays: Int): GcReport = {
-    val (base, rows) = readManifest(spark, dest).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot at $dest has no manifest — re-run Snapshot.backup on it"))
+  def gc(spark: SparkSession, dest: String, keepDays: Int): GcReport = AtomicDir.withLease(dest) {
+    val (base, rows) = requireManifest(spark, dest)
     // one shared expiry rule with the directory GC (Retention.expireDays)
     val (expiredDays, _) = Retention.expireDays(rows.map(_._1), keepDays)
     val expiredSet = expiredDays.toSet
     val (expired, kept) = rows.partition(r => expiredSet(r._1))
     if (expired.nonEmpty) {
-      val destPath = new org.apache.hadoop.fs.Path(dest)
-      val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-      expired.foreach { case (day, _, _, _, source) =>
-        if (source != "base")
-          fs.delete(new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day"), true)
-      }
-      writeManifest(spark, dest, kept.map { case (day, n, x, s, src) =>
-        (day, n, x, s, src, base.orNull)
-      })
+      commitTxn(spark, dest,
+        expired.collect { case (day, _, _, _, src) if src != "base" => (None, dayDir(dest, day)) },
+        Seq(dest -> ((base, kept))))
       // fail-fast consistency: the surviving local partition dirs must
       // be exactly the kept locally-sourced days (metadata-scale listing)
-      val remaining = fs.listStatus(destPath).map(_.getPath.getName)
+      val remaining = AtomicDir.fileSystem(dest).listStatus(new Path(dest)).map(_.getPath.getName)
         .collect { case p if p.startsWith("bucket_day=") => p.stripPrefix("bucket_day=") }
         .sorted.toSeq
       val wantLocal = kept.collect { case (day, _, _, _, src) if src != "base" => day }
@@ -280,66 +286,35 @@ object Snapshot {
     * the small-files defense: a snapshot written by a 1000-task job,
     * or grown by many incremental ticks, otherwise fragments into
     * task-count × days files and every restore/scan pays the
-    * per-file open cost. Runs day-at-a-time (write-new-then-rename,
-    * same swap discipline as the streaming projection) so a crash
+    * per-file open cost. Runs day-at-a-time, so the extra storage
+    * peaks at one day: each fragmented day is rewritten as one file
+    * under `_graft_txn/`, must digest exactly as the manifest says
+    * (when there is one), and goes live in its own commit, so a crash
     * leaves every partition either old or new, never half.
     */
-  def compact(spark: SparkSession, dest: String): CompactReport = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-
-    // recover any half-finished swap from a previous crashed run: a
-    // missing day dir with a surviving tmp promotes (content identical
-    // by construction); with only an old, the old restores; leftovers
-    // next to an intact day dir are uncommitted and drop
-    fs.listStatus(destPath).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val dayName = if (n.startsWith("_compact_tmp_")) Some(n.stripPrefix("_compact_tmp_"))
-        else if (n.startsWith("_compact_old_")) Some(n.stripPrefix("_compact_old_"))
-        else None
-      dayName.foreach { day =>
-        val dir = new org.apache.hadoop.fs.Path(destPath, day)
-        if (fs.exists(dir)) fs.delete(p, true)
-        else if (!fs.rename(p, dir))
-          throw new java.io.IOException(s"compaction recovery failed for $dir")
+  def compact(spark: SparkSession, dest: String): CompactReport = AtomicDir.withLease(dest) {
+    val want = readManifest(spark, dest).map(_._2.map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
+    val fs = AtomicDir.fileSystem(dest)
+    val files = fs.listStatus(new Path(dest)).map(_.getPath).collect {
+      case dir if dir.getName.startsWith("bucket_day=") =>
+        dir.getName.stripPrefix("bucket_day=") -> fs.listStatus(dir).map(_.getPath.getName)
+          .count(n => n.endsWith(".parquet") || n.startsWith("part-"))
+    }.toMap
+    val days = files.collect { case (day, n) if n > 1 => day }.toSeq.sorted
+    days.foreach { d =>
+      val day = spark.read.parquet(dayDir(dest, d))
+      day.coalesce(1).write.parquet(stagedDay(dest, d))
+      // the rewrite must not change content: staged digest == manifest
+      val schema = StructType(day.schema.fields :+ StructField("bucket_day", StringType))
+      want.foreach { w =>
+        val got = digestDays(spark, s"$dest/$TxnDir/data", Seq(d), schema)
+        require(got.get(d) == w.get(d),
+          s"compaction read-back of bucket_day=$d diverges from the manifest at $dest")
       }
+      commitTxn(spark, dest, Seq((Some(stagedDay(dest, d)), dayDir(dest, d))), Nil)
     }
-
-    val dayDirs = fs.listStatus(destPath).map(_.getPath)
-      .filter(_.getName.startsWith("bucket_day="))
-    var before = 0L
-    var after = 0L
-    val compacted = Seq.newBuilder[String]
-    dayDirs.sortBy(_.getName).foreach { dir =>
-      val parts = fs.listStatus(dir).map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") || p.getName.startsWith("part-"))
-      before += parts.length
-      if (parts.length > 1) {
-        val tmp = new org.apache.hadoop.fs.Path(
-          destPath, "_compact_tmp_" + dir.getName)
-        spark.read.parquet(dir.toString).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        // keep only data files in the swapped-in dir (drop _SUCCESS)
-        fs.listStatus(tmp).map(_.getPath)
-          .filterNot(p => p.getName.endsWith(".parquet") || p.getName.startsWith("part-"))
-          .foreach(p => fs.delete(p, false))
-        // rename-aside swap: the old partition is never deleted before
-        // the new one is live — a crash leaves either dir or a
-        // recoverable tmp/old pair (see the recovery pass above)
-        val old = new org.apache.hadoop.fs.Path(
-          destPath, "_compact_old_" + dir.getName)
-        if (!fs.rename(dir, old))
-          throw new java.io.IOException(s"compaction swap failed for $dir (set-aside)")
-        if (!fs.rename(tmp, dir)) {
-          fs.rename(old, dir) // roll back before failing
-          throw new java.io.IOException(s"compaction swap failed for $dir")
-        }
-        fs.delete(old, true)
-        compacted += dir.getName.stripPrefix("bucket_day=")
-        after += 1
-      } else after += parts.length
-    }
-    CompactReport(compacted.result(), before, after)
+    val after = files.values.map(n => if (n > 1) 1 else n).sum
+    CompactReport(days, files.values.sum.toLong, after.toLong)
   }
 
   final case class MutationReport(daysRewritten: Seq[String],
@@ -357,9 +332,9 @@ object Snapshot {
     * then ONE partitioned write rewrites all of them — cost is
     * O(matched days) in data, never O(snapshot), and a fixed number of
     * Spark jobs whatever the number of days. Unaffected days keep their
-    * files and manifest digests untouched. Day swaps use the same rename-aside
-    * discipline as [[compact]]; a crash leaves every day either old or
-    * new.
+    * files and manifest digests untouched. The rewritten and dropped
+    * days and the manifest go live in one commit ([[commitTxn]]), so a
+    * crash leaves the whole snapshot either old or new.
     *
     * On an incremental snapshot, a mutated day the manifest attributes
     * to the base is materialized LOCALLY (copy-on-write) and its
@@ -370,7 +345,8 @@ object Snapshot {
     * GDPR use case that propagation is the point; take a fresh full
     * backup first if the dependents must keep the old rows.
     */
-  def delete(spark: SparkSession, dest: String, predicate: Column): MutationReport = {
+  def delete(spark: SparkSession, dest: String, predicate: Column): MutationReport =
+      AtomicDir.withLease(dest) {
     // NULL-predicate rows survive: DELETE removes rows where the
     // predicate is TRUE — `!pred` alone would filter NULLs out too
     val r = mutate(spark, dest, predicate, day => day.filter(!coalesce(predicate, lit(false))))
@@ -385,7 +361,7 @@ object Snapshot {
     * Same day-granular rewrite + manifest re-digest as [[delete]].
     */
   def update(spark: SparkSession, dest: String, predicate: Column,
-      assignments: Map[String, Column]): MutationReport = {
+      assignments: Map[String, Column]): MutationReport = AtomicDir.withLease(dest) {
     val r = mutate(spark, dest, predicate, { day =>
       val bad = assignments.keySet -- day.columns.toSet
       require(bad.isEmpty, s"update assigns to unknown column(s): ${bad.mkString(", ")}")
@@ -415,8 +391,7 @@ object Snapshot {
     * rewrite — found by ONE per-day (count, distinct-count) pass,
     * metadata-scale collect.
     */
-  def deduplicate(spark: SparkSession, dest: String): MutationReport = {
-    recoverMutationDebris(spark, dest)
+  def deduplicate(spark: SparkSession, dest: String): MutationReport = AtomicDir.withLease(dest) {
     val manifest = requireManifest(spark, dest)
     val resolved = resolve(spark, dest, Some(manifest))
     val dataCols = resolved.columns.filterNot(_ == "bucket_day").sorted
@@ -455,13 +430,12 @@ object Snapshot {
     * like the manifest; model-scale by construction.
     */
   def mutations(spark: SparkSession, dest: String): DataFrame =
-    readSidecar(spark, dest, MutationsDir, MutationsSchema).getOrElse(
+    readSidecar(spark, dest, MutationsDir, Some(MutationsSchema)).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema))
 
   private def logMutation(spark: SparkSession, dest: String, command: String,
       predicate: String, r: MutationReport): Unit = {
     import spark.implicits._
-    val dir = s"$dest/$MutationsDir"
     val prior = mutations(spark, dest).collect().map(x =>
       (x.getLong(0), x.getLong(1), x.getString(2), x.getString(3),
         x.getLong(4), x.getLong(5), x.getLong(6), x.getBoolean(7))).toSeq
@@ -469,35 +443,8 @@ object Snapshot {
     val row = (nextId, System.currentTimeMillis(), command, predicate,
       r.daysRewritten.length.toLong, r.daysDropped.length.toLong,
       r.rowsAffected, true)
-    (prior :+ row)
-      .toDF("mutation_id", "event_time_ms", "command", "predicate",
-        "days_rewritten", "days_dropped", "rows_affected", "is_done")
-      .coalesce(1).write.mode("overwrite").parquet(graft.AtomicDir.tmpPath(dir))
-    graft.AtomicDir.swap(dir)
-  }
-
-  /** Clear debris a crashed mutation left behind, BEFORE any scan of
-    * the snapshot (a day missing mid-swap must be restored before the
-    * predicate pass, or its rows would be invisible to the mutation):
-    * stray `_mutate_tmp_` dirs are uncommitted work (drop); a
-    * `_mutate_old_` set-aside whose day directory is missing restores
-    * (the crash hit between the swap's two renames); one next to an
-    * intact day is a completed swap's leftover (drop).
-    */
-  private def recoverMutationDebris(spark: SparkSession, dest: String): Unit = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(destPath)) return
-    fs.listStatus(destPath).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith("_mutate_tmp_")) fs.delete(p, true)
-      else if (n.startsWith("_mutate_old_")) {
-        val dir = new org.apache.hadoop.fs.Path(destPath, n.stripPrefix("_mutate_old_"))
-        if (fs.exists(dir)) fs.delete(p, true)
-        else if (!fs.rename(p, dir))
-          throw new java.io.IOException(s"mutation recovery failed for $dir")
-      }
-    }
+    writeSidecar(dest, MutationsDir, (prior :+ row).toDF("mutation_id", "event_time_ms",
+      "command", "predicate", "days_rewritten", "days_dropped", "rows_affected", "is_done"))
   }
 
   private[graft] def requireManifest(spark: SparkSession, dest: String): Manifest =
@@ -516,7 +463,6 @@ object Snapshot {
 
   private def mutate(spark: SparkSession, dest: String, predicate: Column,
       rewriteDay: DataFrame => DataFrame): MutationReport = {
-    recoverMutationDebris(spark, dest)
     val manifest = requireManifest(spark, dest)
     val resolved = resolve(spark, dest, Some(manifest))
     // one pass over the resolved view: which days contain matches, and
@@ -527,100 +473,52 @@ object Snapshot {
       hits.map(_._1).sorted, rewriteDay, hits.map(_._2).sum)
   }
 
-  /** Staging root of a mutation's rewrite, at the snapshot root. The
-    * `_mutate_tmp_` prefix is what [[recoverMutationDebris]] sweeps.
-    */
-  private[graft] val MutateStaging = "_mutate_tmp_staging"
-
   /** Shared day-granular rewrite core of [[delete]]/[[update]]/
-    * [[deduplicate]]: swap each affected day via rename-aside, drop
-    * emptied days, re-digest only what changed, update the manifest.
-    * `resolved` is the caller's resolve over `manifest` — the snapshot
-    * is resolved once per mutation.
-    *
-    * Two phases: first ONE write of `rewriteDay` over every affected
-    * day, partitioned by `bucket_day`, into the `_mutate_tmp_staging`
-    * root with NOTHING existing touched — a day with no directory in
-    * that output is a dropped day. So the refuse-to-empty-the-snapshot
-    * guard (and any write failure) aborts with the snapshot
-    * bit-identical, and only then do the rename-aside swaps and day
-    * drops run. The Spark job count is fixed, not one write (plus one
-    * emptiness probe) per day. Crash debris from a previous run,
-    * staging root included, is swept by [[recoverMutationDebris]] at
-    * the mutation ENTRY points — before the predicate scan, so a day
-    * missing mid-swap is restored before its rows are searched.
+    * [[deduplicate]]: ONE write of `rewriteDay` over every affected
+    * day, partitioned by `bucket_day`, stages the new days with NOTHING
+    * live touched — a day with no staged directory is a dropped day.
+    * The refuse-to-empty guard runs, the staged days are digested (a
+    * write-then-verify read-back, like backup()'s), and only then does
+    * one [[commitTxn]] swap the rewritten days in, drop the emptied
+    * ones and rewrite the manifest. The Spark job count is fixed, not
+    * one write (plus one emptiness probe) per day. `resolved` is the
+    * caller's resolve over `manifest` (one resolve per mutation).
     */
   private def rewriteDayPartitions(spark: SparkSession, dest: String,
       manifest: Manifest, resolved: DataFrame,
       affected: Seq[String], rewriteDay: DataFrame => DataFrame,
       rowsAffected: Long): MutationReport = {
     val (base, manifestRows) = manifest
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(destPath, MutateStaging)
-
-    // phase 1 — materialize: every affected day's rewrite in one
-    // partitioned write; the snapshot itself is untouched
-    rewriteDay(resolved.filter(col("bucket_day").isin(affected: _*)))
-      .write.mode("overwrite").partitionBy("bucket_day").parquet(staging.toString)
-    val staged =
-      if (!fs.exists(staging)) Set.empty[String]
-      else fs.listStatus(staging).map(_.getPath.getName)
-        .collect { case n if n.startsWith("bucket_day=") => n.stripPrefix("bucket_day=") }
-        .toSet
+    val data = s"$dest/$TxnDir/data"
+    val out = rewriteDay(resolved.filter(col("bucket_day").isin(affected: _*)))
+    out.write.mode("overwrite").partitionBy("bucket_day").parquet(data)
+    val fs = AtomicDir.fileSystem(data)
+    val staged = fs.listStatus(new Path(data)).map(_.getPath.getName)
+      .collect { case n if n.startsWith("bucket_day=") => n.stripPrefix("bucket_day=") }.toSet
     val (rewrittenDays, droppedDays) = affected.partition(staged)
     if ((manifestRows.map(_._1).toSet -- droppedDays).isEmpty) {
       // refuse BEFORE anything is destroyed — the guard must protect
       // the data, not lament it
-      fs.delete(staging, true)
+      fs.delete(new Path(s"$dest/$TxnDir"), true)
       throw new IllegalArgumentException(
         s"mutation would delete every row of $dest — refusing to leave an empty snapshot")
     }
-
-    // phase 2 — swap: rename-aside each rewritten day (the old dir may
-    // not exist: a base-sourced day materializes locally here —
-    // copy-on-write), delete the emptied days
-    rewrittenDays.foreach { day =>
-      val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
-      val tmp = new org.apache.hadoop.fs.Path(staging, s"bucket_day=$day")
-      val old = new org.apache.hadoop.fs.Path(destPath, s"_mutate_old_bucket_day=$day")
-      if (fs.exists(dayDir) && !fs.rename(dayDir, old))
-        throw new java.io.IOException(s"mutation swap failed for $dayDir (set-aside)")
-      if (!fs.rename(tmp, dayDir)) {
-        if (fs.exists(old)) fs.rename(old, dayDir)
-        throw new java.io.IOException(s"mutation swap failed for $dayDir")
-      }
-      if (fs.exists(old)) fs.delete(old, true)
-    }
-    droppedDays.foreach { day =>
-      val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
-      if (fs.exists(dayDir)) fs.delete(dayDir, true)
-    }
-    fs.delete(staging, true)
-
-    // re-digest ONLY the rewritten days from the read-back (they are
-    // all local dirs now) — write-then-verify, like backup()
-    val newDigests: Map[String, (Long, Long, String)] =
-      if (rewrittenDays.isEmpty) Map.empty
-      else digestScan(restore(spark, dest)
-        .filter(col("bucket_day").isin(rewrittenDays: _*)))
-        .map { case (d, n, x, s) => d -> ((n, x, s)) }.toMap
-    require(newDigests.keySet == rewrittenDays.toSet,
-      s"mutation read-back lost day(s): ${(rewrittenDays.toSet -- newDigests.keySet).mkString(", ")}")
-
+    val newDigests = digestDays(spark, data, rewrittenDays, out.schema)
+    require(newDigests.keySet == rewrittenDays.toSet, "mutation read-back lost day(s): " +
+      (rewrittenDays.toSet -- newDigests.keySet).mkString(", "))
     val newRows = manifestRows.flatMap { case (day, n, x, s, source) =>
       if (droppedDays.contains(day)) None
       else newDigests.get(day) match {
         case Some((n2, x2, s2)) =>
           // a day rewritten locally is now delta-sourced on a chain
-          val src = if (source == "base") "delta" else source
-          Some((day, n2, x2, s2, src, base.orNull))
-        case None => Some((day, n, x, s, source, base.orNull))
+          Some((day, n2, x2, s2, if (source == "base") "delta" else source))
+        case None => Some((day, n, x, s, source))
       }
     }
-    require(newRows.nonEmpty,
-      s"mutation deleted every row of $dest — refuse to leave an empty snapshot")
-    writeManifest(spark, dest, newRows)
+    commitTxn(spark, dest,
+      rewrittenDays.map(d => (Some(stagedDay(dest, d)), dayDir(dest, d))) ++
+        droppedDays.map(d => (None, dayDir(dest, d))),
+      Seq(dest -> ((base, newRows))))
     MutationReport(rewrittenDays, droppedDays, rowsAffected)
   }
 
@@ -664,173 +562,169 @@ object Snapshot {
     rows.toDF("bucket_day", "n_rows", "bytes")
   }
 
+  /** `day`'s manifest row; refuses an unknown day and the only day. */
+  private def removableDay(m: Manifest, dest: String, day: String, verb: String) = {
+    val row = m._2.find(_._1 == day).getOrElse(throw new IllegalArgumentException(
+      s"no partition bucket_day=$day in snapshot $dest (have: ${m._2.map(_._1).mkString(", ")})"))
+    require(m._2.length > 1,
+      s"refusing to $verb the only partition of $dest — that would empty the snapshot")
+    row
+  }
+
+  /** Fails, before anything is written, unless the data columns agree. */
+  private def requireSameSchema(src: DataFrame, dst: DataFrame, what: String): Unit = {
+    val Seq(a, b) = Seq(src, dst).map(_.drop("bucket_day").schema)
+    def cols(t: StructType) = t.fields.map(f => (f.name, f.dataType)).toSeq
+    require(cols(a) == cols(b), s"schema mismatch $what: source $a vs destination $b")
+  }
+
   /** `ALTER TABLE … DETACH PARTITION` — take one day out of service:
-    * its directory moves aside to `_detached_bucket_day=<day>` (data
+    * its directory moves to `_detached/bucket_day=<day>` (data
     * preserved, exactly ClickHouse's `detached/` area) and the manifest
-    * drops the row, so restores, tier views, gc, and incremental
-    * chains all exclude the day immediately. A base-sourced day on a
-    * chain has no local directory — it materializes copy-on-write into
-    * the detached area first, so the attach-back contract is uniform
-    * and the base snapshot is never touched.
+    * drops the row in the same commit, so restores, tier views, gc,
+    * and incremental chains all exclude the day immediately. A
+    * base-sourced day on a chain has no local directory — it
+    * materializes copy-on-write into the detached area, so the
+    * attach-back contract is uniform and the base snapshot is never
+    * touched.
     *
     * Scale shape: one rename (or one day-sized copy for base-sourced
     * days) + the one-row-per-day manifest rewrite. No other data moves.
     */
-  def detachPartition(spark: SparkSession, dest: String, day: String): Unit = {
-    val (base, rows) = requireManifest(spark, dest)
-    val row = rows.find(_._1 == day).getOrElse(throw new IllegalArgumentException(
-      s"no partition bucket_day=$day in snapshot $dest (have: ${rows.map(_._1).mkString(", ")})"))
-    require(rows.length > 1,
-      s"refusing to detach the only partition of $dest — that would empty the snapshot")
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
+  def detachPartition(spark: SparkSession, dest: String, day: String): Unit =
+      AtomicDir.withLease(dest) {
+    val manifest @ (base, rows) = requireManifest(spark, dest)
+    val row = removableDay(manifest, dest, day, "detach")
+    val fs = AtomicDir.fileSystem(dest)
     // nested under a plain `_`-prefixed dir: a name containing `=` at
     // the snapshot root would be parsed as a conflicting partition
     // column by Spark's discovery; `_detached/` is invisible like the
     // manifest (exactly ClickHouse's `detached/` area)
-    val detached = new org.apache.hadoop.fs.Path(destPath, s"_detached/bucket_day=$day")
-    require(!fs.exists(detached),
+    val detached = s"$dest/_detached/bucket_day=$day"
+    require(!fs.exists(new Path(detached)),
       s"a detached copy of bucket_day=$day already exists at $dest — attach or delete it first")
-    fs.mkdirs(detached.getParent)
-    if (row._5 == "base")
-      // copy-on-write: the day's bytes live in the base; materialize
-      // them locally so attach-back never depends on the base's gc
-      resolve(spark, dest).filter(col("bucket_day") === day).drop("bucket_day")
-        .write.parquet(detached.toString)
-    else if (!fs.rename(dayDir, detached))
-      throw new java.io.IOException(s"detach failed for $dayDir")
-    writeManifest(spark, dest, rows.filterNot(_._1 == day)
-      .map(r => (r._1, r._2, r._3, r._4, r._5, base.orNull)))
+    fs.mkdirs(new Path(s"$dest/_detached"))
+    val from =
+      if (row._5 != "base") dayDir(dest, day)
+      else {
+        // copy-on-write: the day's bytes live in the base; materialize
+        // them locally so attach-back never depends on the base's gc
+        resolve(spark, dest, Some(manifest)).filter(col("bucket_day") === day).drop("bucket_day")
+          .write.parquet(stagedDay(dest, day))
+        stagedDay(dest, day)
+      }
+    commitTxn(spark, dest, Seq((Some(from), detached)),
+      Seq(dest -> ((base, rows.filterNot(_._1 == day)))))
   }
 
   /** `ALTER TABLE … ATTACH PARTITION` — bring a detached day back: the
-    * directory renames into place, the read-back re-digests it (the
-    * checksum verification ClickHouse does on ATTACH), and the manifest
-    * gains the row back as locally-sourced (`delta` on a chain — the
-    * local dir now carries the day, whatever its original source).
+    * detached directory is digested where it lies (the checksum
+    * verification ClickHouse does on ATTACH), then it moves into place
+    * and the manifest gains the row back, locally-sourced (`delta` on
+    * a chain — the local dir now carries the day, whatever its
+    * original source), in one commit.
     */
-  def attachPartition(spark: SparkSession, dest: String, day: String): Unit = {
+  def attachPartition(spark: SparkSession, dest: String, day: String): Unit =
+      AtomicDir.withLease(dest) {
     val (base, rows) = requireManifest(spark, dest)
     require(!rows.exists(_._1 == day),
       s"partition bucket_day=$day is already attached at $dest")
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val detached = new org.apache.hadoop.fs.Path(destPath, s"_detached/bucket_day=$day")
-    require(fs.exists(detached), s"no detached partition bucket_day=$day at $dest")
-    val dayDir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day")
-    if (!fs.rename(detached, dayDir))
-      throw new java.io.IOException(s"attach failed for $dayDir")
-    // ATTACH verifies what it adopted: digest the day from the read-back
-    val dig = digestScan(restore(spark, dest).filter(col("bucket_day") === day))
-    require(dig.length == 1 && dig.head._2 > 0,
+    val detached = s"$dest/_detached/bucket_day=$day"
+    require(AtomicDir.fileSystem(dest).exists(new Path(detached)),
+      s"no detached partition bucket_day=$day at $dest")
+    // the day's own footers give its schema; the digest reads it back
+    val schema = StructType(spark.read.parquet(detached).schema.fields :+
+      StructField("bucket_day", StringType))
+    val dig = digestDays(spark, s"$dest/_detached", Seq(day), schema)
+    require(dig.get(day).exists(_._1 > 0),
       s"attach read-back failed for bucket_day=$day at $dest")
-    val (_, n, x, s) = dig.head
-    val src = if (base.isDefined) "delta" else "full"
-    writeManifest(spark, dest, (rows.map(r => (r._1, r._2, r._3, r._4, r._5, base.orNull))
-      :+ ((day, n, x, s, src, base.orNull))).sortBy(_._1))
+    val (n, x, s) = dig(day)
+    commitTxn(spark, dest, Seq((Some(detached), dayDir(dest, day))),
+      Seq(dest -> ((base, (rows :+ ((day, n, x, s, if (base.isDefined) "delta" else "full")))
+        .sortBy(_._1)))))
   }
 
   /** `ALTER TABLE … DROP PARTITION` — discard one day outright: the
     * local directory deletes (if any — a base-sourced day on a chain
     * has none and the base is never touched) and the manifest drops
-    * the row, so restores, tier views, and chains exclude the day
-    * immediately. Pure metadata + one directory delete — the
-    * partition-aligned fast path of [[delete]] (which would reach the
-    * same outcome through a predicate scan). Refuses to drop the only
-    * partition, like every other would-empty guard.
+    * the row in the same commit, so restores, tier views, and chains
+    * exclude the day immediately. Pure metadata + one directory delete
+    * — the partition-aligned fast path of [[delete]] (which would
+    * reach the same outcome through a predicate scan). Refuses to drop
+    * the only partition, like every other would-empty guard.
     */
-  def dropPartition(spark: SparkSession, dest: String, day: String): Unit = {
-    val (base, rows) = requireManifest(spark, dest)
-    val row = rows.find(_._1 == day).getOrElse(throw new IllegalArgumentException(
-      s"no partition bucket_day=$day in snapshot $dest (have: ${rows.map(_._1).mkString(", ")})"))
-    require(rows.length > 1,
-      s"refusing to drop the only partition of $dest — that would empty the snapshot")
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (row._5 != "base")
-      fs.delete(new org.apache.hadoop.fs.Path(destPath, s"bucket_day=$day"), true)
-    writeManifest(spark, dest, rows.filterNot(_._1 == day)
-      .map(r => (r._1, r._2, r._3, r._4, r._5, base.orNull)))
+  def dropPartition(spark: SparkSession, dest: String, day: String): Unit =
+      AtomicDir.withLease(dest) {
+    val manifest @ (base, rows) = requireManifest(spark, dest)
+    val row = removableDay(manifest, dest, day, "drop")
+    commitTxn(spark, dest, if (row._5 != "base") Seq((None, dayDir(dest, day))) else Nil,
+      Seq(dest -> ((base, rows.filterNot(_._1 == day)))))
   }
 
   /** `ALTER TABLE … MOVE PARTITION TO TABLE` — re-home one day from
-    * one snapshot to another: detach at the source, rename the
-    * detached directory across (one filesystem move — no data rewrite,
-    * like ClickHouse moving parts between tables on one disk), attach
-    * at the destination (which re-digests — the adoption checksum).
-    * Schemas must agree; checked against the source day's footer
-    * BEFORE anything moves, so a mismatch aborts with both snapshots
+    * one snapshot to another: the source's day directory renames
+    * across (one filesystem move — no data rewrite, like ClickHouse
+    * moving parts between tables on one disk; a base-sourced day
+    * materializes copy-on-write), digested where it lies first (the
+    * adoption checksum), and both manifests change in the same commit.
+    * Schemas must agree; checked against the source day BEFORE
+    * anything moves, so a mismatch aborts with both snapshots
     * untouched.
     */
   def movePartition(spark: SparkSession, srcDest: String, dstDest: String,
-      day: String): Unit = {
-    val srcDay = new org.apache.hadoop.fs.Path(srcDest, s"bucket_day=$day")
-    val fs = srcDay.getFileSystem(spark.sessionState.newHadoopConf())
+      day: String): Unit = AtomicDir.withLease(srcDest)(AtomicDir.withLease(dstDest) {
+    val srcManifest @ (srcBase, srcRows) = requireManifest(spark, srcDest)
+    val row = removableDay(srcManifest, srcDest, day, "move")
     // fail fast with nothing moved: destination must be a manifested
     // snapshot without the day, and the schemas must line up
-    val (_, dstRows) = requireManifest(spark, dstDest)
+    val dstManifest @ (dstBase, dstRows) = requireManifest(spark, dstDest)
     require(!dstRows.exists(_._1 == day),
       s"destination $dstDest already holds bucket_day=$day")
-    val srcSchema = resolve(spark, srcDest).filter(col("bucket_day") === day)
-      .drop("bucket_day").schema
-    val dstSchema = resolve(spark, dstDest).drop("bucket_day").schema
-    require(srcSchema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        dstSchema.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"schema mismatch moving bucket_day=$day: source $srcSchema vs destination $dstSchema")
-    detachPartition(spark, srcDest, day)
-    val from = new org.apache.hadoop.fs.Path(srcDest, s"_detached/bucket_day=$day")
-    val to = new org.apache.hadoop.fs.Path(dstDest, s"_detached/bucket_day=$day")
-    fs.mkdirs(to.getParent)
-    if (!fs.rename(from, to)) {
-      attachPartition(spark, srcDest, day) // roll back before failing
-      throw new java.io.IOException(s"move failed renaming $from to $to")
-    }
-    attachPartition(spark, dstDest, day)
-  }
+    val srcSnap = resolve(spark, srcDest, Some(srcManifest))
+    val dstSnap = resolve(spark, dstDest, Some(dstManifest))
+    requireSameSchema(srcSnap, dstSnap, s"moving bucket_day=$day")
+    val from =
+      if (row._5 != "base") srcDest
+      else {
+        srcSnap.filter(col("bucket_day") === day).drop("bucket_day")
+          .write.parquet(stagedDay(dstDest, day))
+        s"$dstDest/$TxnDir/data"
+      }
+    val dig = digestDays(spark, from, Seq(day), srcSnap.schema)
+    require(dig.get(day).contains((row._2, row._3, row._4)),
+      s"move read-back of bucket_day=$day diverges from the manifest of $srcDest")
+    commitTxn(spark, dstDest, Seq((Some(dayDir(from, day)), dayDir(dstDest, day))), Seq(
+      srcDest -> ((srcBase, srcRows.filterNot(_._1 == day))),
+      dstDest -> ((dstBase, (dstRows :+ ((day, row._2, row._3, row._4,
+        if (dstBase.isDefined) "delta" else "full"))).sortBy(_._1)))))
+  })
 
   /** `ALTER TABLE … REPLACE PARTITION … FROM src` — adopt the source
     * snapshot's version of one day, COPY semantics (the source is
     * never touched, unlike [[movePartition]]): the source day resolves
-    * (chains materialize copy-on-write) into the destination's
-    * detached area, the destination's current day — if any — detaches
-    * aside, and the incoming directory attaches (re-digest, the
-    * adoption checksum). Schema compatibility is checked BEFORE any
-    * write. A crash mid-way leaves the destination either pre-replace
-    * or in the documented detached state ([[attachPartition]] rolls
-    * forward); the staged `.incoming`/`.replaced` directories are
-    * `_`-hidden debris, never data.
+    * (chains materialize copy-on-write) into the destination's staging,
+    * is digested there (the adoption checksum), and replaces the
+    * destination's day — if any — in one commit with the manifest.
+    * Schema compatibility is checked BEFORE any write.
     */
   def replacePartition(spark: SparkSession, srcDest: String, dstDest: String,
-      day: String): Unit = {
-    val (_, srcRows) = requireManifest(spark, srcDest)
+      day: String): Unit = AtomicDir.withLease(dstDest) {
+    val srcManifest @ (_, srcRows) = requireManifest(spark, srcDest)
     require(srcRows.exists(_._1 == day),
       s"source $srcDest has no partition bucket_day=$day")
-    val (_, dstRows) = requireManifest(spark, dstDest)
-    val srcSchema = resolve(spark, srcDest).drop("bucket_day").schema
-    val dstSchema = resolve(spark, dstDest).drop("bucket_day").schema
-    require(srcSchema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        dstSchema.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"schema mismatch replacing bucket_day=$day: source $srcSchema vs destination $dstSchema")
-    val fs = new org.apache.hadoop.fs.Path(dstDest)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val detached = new org.apache.hadoop.fs.Path(dstDest, s"_detached/bucket_day=$day")
-    require(!fs.exists(detached),
-      s"destination $dstDest already has a detached bucket_day=$day — attach or remove it first")
-    // stage the copy while the destination still serves its old day
-    val staged = new org.apache.hadoop.fs.Path(dstDest, s"_detached/bucket_day=$day.incoming")
-    resolve(spark, srcDest).filter(col("bucket_day") === day).drop("bucket_day")
-      .write.mode("overwrite").parquet(staged.toString)
-    val replaced = new org.apache.hadoop.fs.Path(dstDest, s"_detached/bucket_day=$day.replaced")
-    if (dstRows.exists(_._1 == day)) {
-      detachPartition(spark, dstDest, day)
-      if (!fs.rename(detached, replaced))
-        throw new java.io.IOException(s"replace: cannot set aside $detached")
-    }
-    if (!fs.rename(staged, detached))
-      throw new java.io.IOException(s"replace: cannot promote $staged")
-    attachPartition(spark, dstDest, day)
-    fs.delete(replaced, true)
+    val dstManifest @ (base, dstRows) = requireManifest(spark, dstDest)
+    val srcSnap = resolve(spark, srcDest, Some(srcManifest))
+    val dstSnap = resolve(spark, dstDest, Some(dstManifest))
+    requireSameSchema(srcSnap, dstSnap, s"replacing bucket_day=$day")
+    srcSnap.filter(col("bucket_day") === day).drop("bucket_day")
+      .write.mode("overwrite").parquet(stagedDay(dstDest, day))
+    val dig = digestDays(spark, s"$dstDest/$TxnDir/data", Seq(day), srcSnap.schema)
+    require(dig.get(day).exists(_._1 > 0),
+      s"replace read-back failed for bucket_day=$day at $dstDest")
+    val (n, x, s) = dig(day)
+    commitTxn(spark, dstDest, Seq((Some(stagedDay(dstDest, day)), dayDir(dstDest, day))),
+      Seq(dstDest -> ((base, (dstRows.filterNot(_._1 == day) :+
+        ((day, n, x, s, if (base.isDefined) "delta" else "full"))).sortBy(_._1)))))
   }
 
   /** Hidden schema-evolution sidecar: the ordered `ALTER TABLE ADD/
@@ -903,7 +797,7 @@ object Snapshot {
 
   private def readSchemaLog(spark: SparkSession, dest: String)
       : Seq[(Long, String, String, String, String)] =
-    readSidecar(spark, dest, SchemaDir, SchemaLogSchema).toSeq.flatMap(_.collect())
+    readSidecar(spark, dest, SchemaDir, Some(SchemaLogSchema)).toSeq.flatMap(_.collect())
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getString(4)))
       .sortBy(_._1)
@@ -911,11 +805,7 @@ object Snapshot {
   private def writeSchemaLog(spark: SparkSession, dest: String,
       rows: Seq[(Long, String, String, String, String)]): Unit = {
     import spark.implicits._
-    val dir = s"$dest/$SchemaDir"
-    graft.AtomicDir.recover(dir)
-    rows.toDF("ord", "action", "name", "default_sql", "data_type")
-      .coalesce(1).write.mode("overwrite").parquet(graft.AtomicDir.tmpPath(dir))
-    graft.AtomicDir.swap(dir)
+    writeSidecar(dest, SchemaDir, rows.toDF("ord", "action", "name", "default_sql", "data_type"))
   }
 
   /** digest() collected as (day, n, xor, sum-string) tuples. */
@@ -924,26 +814,93 @@ object Snapshot {
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDecimal(3).toString)
     }.toSeq
 
-  private def writeManifest(spark: SparkSession, dest: String,
-      rows: Seq[(String, Long, Long, String, String, String)]): Unit = {
+  /** Digests of the day directories `<parent>/bucket_day=<d>`, read
+    * with `schema` (data columns + `bucket_day`): no inference job.
+    */
+  private def digestDays(spark: SparkSession, parent: String, days: Seq[String],
+      schema: StructType): Map[String, (Long, Long, String)] =
+    if (days.isEmpty) Map.empty
+    else digestScan(spark.read.option("basePath", parent).schema(schema)
+      .parquet(days.map(dayDir(parent, _)): _*))
+      .map { case (d, n, x, s) => d -> ((n, x, s)) }.toMap
+
+  private def manifestDf(spark: SparkSession, m: Manifest): DataFrame = {
     import spark.implicits._
-    // AtomicDir swap: a plain overwrite deletes the old manifest before
-    // the new one exists — a crash in that window would orphan the
-    // snapshot's gc/incremental/mutation surface (restore still works;
-    // everything manifest-driven refuses). Same discipline as the
-    // streaming standing-state swaps.
-    val dir = s"$dest/$ManifestDir"
-    graft.AtomicDir.recover(dir)
-    rows.toDF("bucket_day", "n_rows", "content_xor", "content_sum", "source", "base_path")
-      .coalesce(1).write.mode("overwrite").parquet(graft.AtomicDir.tmpPath(dir))
-    graft.AtomicDir.swap(dir)
+    m._2.map { case (d, n, x, s, src) => (d, n, x, s, src, m._1.orNull) }
+      .toDF("bucket_day", "n_rows", "content_xor", "content_sum", "source", "base_path")
+      .coalesce(1)
   }
 
-  /** The [[Manifest]] of `dir`; None when the directory has no manifest
-    * (a bare parquet dataset). One Spark job: the schema is known.
+  /** Replace sidecar `name` of `dest` with `df` through an AtomicDir
+    * swap: a plain overwrite deletes the old sidecar before the new one
+    * exists — for a BACKUP's manifest, a crash in that window would
+    * orphan the snapshot's gc/incremental/mutation surface (restore
+    * still works; everything manifest-driven refuses).
+    */
+  private def writeSidecar(dest: String, name: String, df: DataFrame): Unit = {
+    val dir = s"$dest/$name"
+    AtomicDir.recover(dir)
+    df.coalesce(1).write.mode("overwrite").parquet(AtomicDir.tmpPath(dir))
+    AtomicDir.swap(dir)
+  }
+
+  /** THE snapshot commit of every day-level verb. The caller has
+    * staged each new day under `_graft_txn/` and checked its digests;
+    * this stages each snapshot's new manifest beside them and commits
+    * `days` — (staged, live) pairs, `None` retiring a live day — and
+    * the manifests as ONE [[AtomicDir.commit]], so a crash leaves every
+    * snapshot wholly before or after the verb ([[recoverTxn]]). Another
+    * snapshot (MOVE's source) gets a link to this commit, so its reads
+    * recover it too; the commit itself retires the link. Runs under
+    * every snapshot's lease, after the verb's last sidecar read (the
+    * holder's recovery discards uncommitted staging).
+    */
+  private def commitTxn(spark: SparkSession, dest: String,
+      days: Seq[(Option[String], String)], manifests: Seq[(String, Manifest)]): Unit = {
+    val txn = s"$dest/$TxnDir"
+    val fs = AtomicDir.fileSystem(txn)
+    val staged = manifests.zipWithIndex.map { case ((snap, m), i) =>
+      manifestDf(spark, m).write.parquet(s"$txn/manifest$i")
+      (Some(s"$txn/manifest$i"), s"$snap/$ManifestDir")
+    }
+    val others = manifests.map(_._1).filter(_ != dest)
+    others.foreach { snap =>
+      val out = fs.create(new Path(s"$snap/$TxnDir/$LinkFile"), true)
+      try out.write(dest.getBytes("UTF-8")) finally out.close()
+    }
+    val links = others.map(snap => (None, s"$snap/$TxnDir"))
+    AtomicDir.commit(s"$txn/commit", (days ++ staged ++ links).map {
+      case (from, live) => AtomicDir.Move(from, live)
+    }, dest +: others)
+    fs.delete(new Path(txn), true)
+  }
+
+  /** The one recover path of [[commitTxn]], run by every sidecar read
+    * (so by [[readManifest]], every verb and every [[resolve]]): a
+    * committed transaction rolls forward; an uncommitted one is
+    * discarded by the snapshot's next writer. A MOVE source first
+    * recovers the commit it links to, if that commit moves any of its
+    * paths; a link left by a crash before that commit's marker names
+    * nothing to recover, and the source's next writer discards it.
+    */
+  private def recoverTxn(dest: String): Unit = {
+    val fs = AtomicDir.fileSystem(dest)
+    val txn = new Path(s"$dest/$TxnDir")
+    if (!fs.exists(txn)) return
+    val owner = try {
+      val in = fs.open(new Path(txn, LinkFile))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    } catch { case _: java.io.FileNotFoundException => "" }
+    if (owner.nonEmpty) AtomicDir.recoverStaged(owner, s"$owner/$TxnDir", touching = Some(dest))
+    AtomicDir.recoverStaged(dest, txn.toString)
+  }
+
+  /** The [[Manifest]] of `dir` (after [[recoverTxn]]); None when the
+    * directory has no manifest (a bare parquet dataset). One Spark
+    * job: the schema is known.
     */
   private def readManifest(spark: SparkSession, dir: String): Option[Manifest] =
-    readSidecar(spark, dir, ManifestDir, ManifestSchema).map { df =>
+    readSidecar(spark, dir, ManifestDir, Some(ManifestSchema)).map { df =>
       val rows = df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
           r.getString(4), Option(r.getString(5))))

@@ -99,42 +99,25 @@ object SystemCatalog {
     // fall back to the per-dest Try (same NULL semantics as before).
     val allDests = (catRows.flatMap(_._4) ++ orphanRows.flatMap(_._4))
       .distinct.filterNot(_.endsWith(".zip"))
-    val totals: Map[String, Long] = if (allDests.isEmpty) Map.empty else {
-      val hconf = spark.sessionState.newHadoopConf()
-      // qualified manifest-dir URI → dest string, for mapping
-      // input_file_name back to its registration
-      val byDir = allDests.flatMap { d =>
-        scala.util.Try {
-          graft.AtomicDir.recover(s"$d/_graft_manifest")
-          val p = new org.apache.hadoop.fs.Path(s"$d/_graft_manifest")
-          val fs = p.getFileSystem(hconf)
-          if (fs.exists(p)) Some(fs.makeQualified(p).toString -> d) else None
-        }.toOption.flatten
-      }.toMap
-      if (byDir.isEmpty) Map.empty
+    val manifests = allDests.flatMap { d =>
+      scala.util.Try(Snapshot.readSidecar(spark, d, Snapshot.ManifestDir,
+        Some(Snapshot.ManifestSchema))).toOption.flatten.map(d -> _)
+    }
+    val totals: Map[String, Long] =
+      if (manifests.isEmpty) Map.empty
       else scala.util.Try {
-        spark.read.parquet(byDir.keys.toSeq: _*)
-          .select(input_file_name().as("f"), col("n_rows"))
-          .collect()
-          .groupBy { r =>
-            val f = r.getString(0)
-            // normalize through Path: input_file_name may spell the
-            // scheme as file:/// where makeQualified spells file:/
-            new org.apache.hadoop.fs.Path(f.substring(0, f.lastIndexOf('/')))
-              .toString
-          }
-          .collect { case (dir, rs) if byDir.contains(dir) =>
-            byDir(dir) -> rs.map(_.getLong(1)).sum
-          }
+        // each dest's part files tagged with the dest: one scan for all
+        manifests.map { case (d, df) => df.select(lit(d).as("dest"), col("n_rows")) }
+          .reduce(_ unionByName _).collect()
+          .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
       }.getOrElse {
-        // mixed-schema or torn manifests: per-dest reads, old behavior
-        byDir.values.flatMap { d =>
+        // torn manifests: per-dest reads, old behavior
+        manifests.flatMap { case (d, _) =>
           scala.util.Try(
             d -> Snapshot.parts(spark, d).agg(sum("n_rows")).head.getLong(0))
             .toOption
         }.toMap
       }
-    }
     (catRows ++ orphanRows).sortBy(r => (r._1.getOrElse(""), r._2)).toSeq
       .map { case (db, name, tmp, dest) =>
         (db, name, tmp, dest, dest.flatMap(totals.get))

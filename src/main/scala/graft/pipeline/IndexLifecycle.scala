@@ -62,7 +62,9 @@ object IndexLifecycle {
     val cur = current(root)
     AtomicDir.recover(cur)
     val model = KMeans.Model(
-      s.read.parquet(s"$cur/_model").orderBy("cluster_id")
+      graft.operators.Snapshot.readSidecar(s, cur, "_model")
+        .getOrElse(throw new IllegalStateException(s"no index generation at $cur"))
+        .orderBy("cluster_id")
         .collect().map(_.getSeq[Double](1).toArray))
     val cents = model.toDf(s.range(0).toDF())
     val emb = Tables(s, dir, "embeddings")

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 /** A mutation rewrites every affected day in one partitioned write.
   * These specs drive one batch that mixes every per-day outcome — a
   * dropped day, a rewritten delta day, a copy-on-write base day — and a
-  * crash between that write and the swap.
+  * crash between that write and the commit.
   */
 class MixedBatchMutationSpec extends SparkSpec {
 
@@ -66,8 +66,8 @@ class MixedBatchMutationSpec extends SparkSpec {
     assert(days.filterNot(Set(stored, dropped, copied)).forall(sources(_) == "base"))
     assert(!new java.io.File(s"$delta/bucket_day=$dropped").exists())
     assert(new java.io.File(s"$delta/bucket_day=$copied").exists())
-    assert(!new java.io.File(s"$delta/${Snapshot.MutateStaging}").exists(),
-      "the staging root must not outlive the swap")
+    assert(!new java.io.File(s"$delta/${Snapshot.TxnDir}").exists(),
+      "the staging directory must not outlive the commit")
 
     // the chain resolves to modified-minus-deleted, and the manifest's
     // digests match both the read-back and the expected rows
@@ -85,18 +85,18 @@ class MixedBatchMutationSpec extends SparkSpec {
     Snapshot.backup(src, col("ts_s"), dest)
     val digestsBefore = Snapshot.manifestDigests(spark, dest)
     // the crashed DELETE got as far as its staging write: the rewrite of
-    // two days sits in the staging root, nothing swapped yet
-    val staging = s"$dest/${Snapshot.MutateStaging}"
+    // two days sits in the staging directory, no commit marker yet
+    val staging = s"$dest/${Snapshot.TxnDir}"
     Snapshot.resolve(spark, dest)
       .filter(col("bucket_day").isin(days(0), days(1)) && col("event_type") =!= "click")
-      .write.partitionBy("bucket_day").parquet(staging)
+      .write.partitionBy("bucket_day").parquet(s"$staging/data")
     assert(sameRows(Snapshot.resolve(spark, dest).drop("bucket_day"), src))
 
-    // the next mutation sweeps the staging root before it scans; one
-    // with no matches never writes a staging root of its own
+    // the next mutation discards the staging before it scans; one
+    // with no matches never stages anything of its own
     val noop = Snapshot.delete(spark, dest, col("event_type") === "no_such")
     assert(noop.rowsAffected == 0L)
-    assert(!new java.io.File(staging).exists(), "the next mutation must sweep the staging root")
+    assert(!new java.io.File(staging).exists(), "the next mutation must discard the uncommitted staging")
     assert(Snapshot.manifestDigests(spark, dest) == digestsBefore)
     assert(sameRows(Snapshot.resolve(spark, dest).drop("bucket_day"), src))
 

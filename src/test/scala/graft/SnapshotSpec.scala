@@ -553,36 +553,44 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("mutations recover crash debris: stray tmps drop, orphaned set-asides restore") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.tornfs.impl", classOf[TornRenameFs].getName)
     val src = Relational.eventsSec(spark, sf)
       .select("event_id", "user_id", "event_type", "value", "ts_s")
-    val dest = Files.createTempDirectory("graft-mut-debris").toString
+    val dest = "tornfs://" + Files.createTempDirectory("graft-mut-debris").toString + "/snap"
     Snapshot.backup(src, col("ts_s"), dest)
     val days = src.select(Retention.bucketDay(col("ts_s")).as("d"))
       .distinct().orderBy("d").collect().map(_.getString(0))
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val txn = new org.apache.hadoop.fs.Path(destPath, Snapshot.TxnDir)
+    def onDay(i: Int) = col("event_type") === "error" && Retention.bucketDay(col("ts_s")) === days(i)
 
-    // crash shape 1: a stray tmp next to an intact day — uncommitted work
-    val strayTmp = new org.apache.hadoop.fs.Path(destPath,
-      s"_mutate_tmp_bucket_day=${days(0)}")
-    fs.mkdirs(strayTmp)
-    // crash shape 2: a set-aside whose day never got its replacement —
-    // the crash hit between the two renames of the swap
-    val day1Dir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=${days(1)}")
-    val orphanOld = new org.apache.hadoop.fs.Path(destPath,
-      s"_mutate_old_bucket_day=${days(1)}")
-    assert(fs.rename(day1Dir, orphanOld))
-
+    // crash shape 1: uncommitted staging (no commit marker) next to
+    // intact days — a stray rewrite of a day
+    fs.mkdirs(new org.apache.hadoop.fs.Path(txn, s"data/bucket_day=${days(0)}"))
     // ANY mutation entry point must sweep the debris first, then work
-    Snapshot.delete(spark, dest,
-      col("event_type") === "error" && Retention.bucketDay(col("ts_s")) === days(2))
-    assert(!fs.exists(strayTmp) && !fs.exists(orphanOld) && fs.exists(day1Dir),
-      "recovery must drop the stray tmp and restore the orphaned day")
+    assert(Snapshot.delete(spark, dest, col("event_type") === "no_such").rowsAffected == 0L)
+    assert(!fs.exists(txn), "recovery must drop the uncommitted staging")
+
+    // crash shape 2: a committed DELETE dies inside a day's move — the
+    // old day deleted, its replacement not live
+    val day1Dir = new org.apache.hadoop.fs.Path(destPath, s"bucket_day=${days(1)}")
+    TornRenameFs.inject = Some(TornRenameFs.Inject(day1Dir.getName,
+      parentName = Some("snap"), crashAfter = true))
+    try intercept[TornRenameFs.TornCrash](Snapshot.delete(spark, dest, onDay(1)))
+    finally { TornRenameFs.inject = None; TornRenameFs.disarm() }
+    // the promote's copy died after creating the directory: nothing in it
+    assert(!fs.exists(day1Dir) || fs.listStatus(day1Dir).isEmpty,
+      "the crash must hit between the old day's delete and the promote")
+
+    Snapshot.delete(spark, dest, onDay(2))
+    assert(fs.exists(day1Dir) && !fs.exists(txn),
+      "recovery must roll the committed move forward and leave no staging")
     val got = Snapshot.resolve(spark, dest).drop("bucket_day")
-    val want = src.filter(!(col("event_type") === "error" &&
-      Retention.bucketDay(col("ts_s")) === days(2)))
+    val want = src.filter(!onDay(1) && !onDay(2))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "post-recovery mutation must see the fully restored snapshot")
+      "post-recovery mutation must see the fully recovered snapshot")
   }
 
   test("the manifest survives a simulated crash mid-swap") {

@@ -4,6 +4,8 @@ first, then this script compares each query's parquet result against
 its DuckDB oracle (columns sorted by name, row-order-sensitive values).
 Every query named in Verify's failed.json is a FAIL too, with or
 without oracle SQL: it threw, so any result on disk is not its own.
+Query names narrow the check to those queries; a name in neither
+oracle_sql.json nor failed.json is a FAIL (nothing was compared).
 Usage: python3 tools/check.py [sfDir] [outDir] [only_query ...]
 """
 import duckdb, json, sys
@@ -23,8 +25,11 @@ oracle = json.load(open(f"{out}/oracle_sql.json"))
 failed = {k: v for k, v in json.load(open(f"{out}/failed.json")).items()
           if not only or k in only}
 fails = [(name, f"threw in graft.Verify: {why}") for name, why in sorted(failed.items())]
-for name in sorted(oracle):
-    if (only and name not in only) or name in failed:
+fails += [(name, "in neither oracle_sql.json nor failed.json: nothing to check")
+          for name in sorted(only - oracle.keys() - failed.keys())]
+checked = sorted(n for n in oracle if not only or n in only)
+for name in checked:
+    if name in failed:
         continue
     sql = oracle[name]
     try:
@@ -60,7 +65,7 @@ for name in sorted(oracle):
 
 for name, why in fails:
     print(f"FAIL {name}: {why}")
-n_fail = sum(1 for name, _ in fails if name in oracle)
-print(f"\n{len(oracle) - n_fail}/{len(oracle)} oracle-checked queries pass")
+n_fail = sum(1 for name, _ in fails if name in checked)
+print(f"\n{len(checked) - n_fail}/{len(checked)} oracle-checked queries pass")
 print(f"{len(failed)} queries threw in graft.Verify")
 sys.exit(1 if fails else 0)
