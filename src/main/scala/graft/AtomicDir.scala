@@ -213,15 +213,19 @@ object AtomicDir {
     val lock = lockPath(dest)
     val token = java.util.UUID.randomUUID().toString
     var attempts = 0
+    var lastError: java.io.IOException = null
     while (true) {
       attempts += 1
       if (attempts > 100)
-        throw new java.io.IOException(s"livelock acquiring lease on $dest")
+        throw new java.io.IOException(s"livelock acquiring lease on $dest", lastError)
       val created = jvmGate.synchronized {
         try { writeLock(fs, lock, ttlMs, token, overwrite = false); true }
         catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.io.IOException if fs.exists(lock) => false
+          // lost to another creator (the lock exists), or to a breaker
+          // that deleted the lock mid-create (a local create sets the
+          // file's permissions after creating it): both retry
+          case e: java.io.IOException => lastError = e; false
         }
       }
       if (created) {

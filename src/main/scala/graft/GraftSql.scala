@@ -52,9 +52,14 @@ import org.apache.spark.sql.types.TimestampType
   */
 object GraftSql {
 
+  import plans.Dialect.{Lexeme, Num, Punct, Quoted, Raw, Str, Tok, Word}
+
   def sql(spark: SparkSession, text: String): DataFrame = {
     val stmt = text.trim.stripSuffix(";").trim
-    stmt match {
+    val s = statement(stmt)
+    // an inline-data INSERT's rows: the raw text after its head
+    lazy val data = if (s.size == 0) "" else stmt.substring(s.ts.last.end).trim
+    s match {
       // ClickHouse table DDL: `CREATE TABLE … ENGINE = <engine> ORDER
       // BY … [SAMPLE BY …]` — the statement every ClickHouse session
       // starts with, and the last Scala-only step in the switch story:
@@ -63,23 +68,22 @@ object GraftSql {
       // .registerSample]] otherwise need from code. Routed ONLY when an
       // ENGINE clause is present — Spark's own CREATE TABLE … USING …
       // falls through untouched.
-      case CreateTableRe(ifne, name, colsBlock, engine, engineArgs, tail) =>
-        createTable(spark, ifne != null, name, colsBlock, engine,
-          Option(engineArgs).map(_.trim).getOrElse(""), tail)
+      case CreateTable(ifne, name, cols, engine, args, _, tail) =>
+        createTable(spark, ifne.nonEmpty, name.name, cols, engine.text, args, tail)
       // ClickHouse's CTAS spelling — `CREATE TABLE t ENGINE = … ORDER
       // BY … AS SELECT …` (no column block: the SELECT declares the
       // schema). The body is dialect text like any SELECT.
-      case CreateTableAsRe(ifne, name, engine, engineArgs, tail, body) =>
-        createTableAs(spark, ifne != null, name, engine,
-          Option(engineArgs).map(_.trim).getOrElse(""), tail.trim, body.trim)
+      case CreateTableAs(ifne, name, engine, args, _, tail, body) =>
+        createTableAs(spark, ifne.nonEmpty, name.name, engine.text, args, tail, body.text)
       // EXCHANGE TABLES a AND b — the operator's swap verb, composed
-      // from three routed RENAMEs so every graft registration re-homes
-      // with its table. DOCUMENTED DIVERGENCE: ClickHouse's EXCHANGE
-      // is atomic; this three-step is not — a crash mid-way leaves the
-      // __graft_xchg intermediate visible (never silent corruption),
-      // and the retry of the SAME statement detects it and rolls
-      // forward/back (the recovery block below).
-      case ExchangeTablesRe(a, b) =>
+      // from three [[renameTable]] steps so every graft registration
+      // re-homes with its table. DOCUMENTED DIVERGENCE: ClickHouse's
+      // EXCHANGE is atomic; this three-step is not — a crash mid-way
+      // leaves the __graft_xchg intermediate visible (never silent
+      // corruption), and the retry of the SAME statement detects it
+      // and rolls forward/back (the recovery block below).
+      case ExchangeTables(ta, tb) =>
+        val (a, b) = (ta.name, tb.name)
         val tmp = s"${a}__graft_xchg"
         // entry-time crash recovery (the AtomicDir.recover discipline,
         // r14 verdict #6): a prior EXCHANGE of these tables that died
@@ -94,9 +98,9 @@ object GraftSql {
           val (aExists, bExists) =
             (spark.catalog.tableExists(a), spark.catalog.tableExists(b))
           if (!aExists && bExists)
-            sql(spark, s"RENAME TABLE $tmp TO $a")
+            renameTable(spark, tmp, a)
           else if (aExists && !bExists) {
-            sql(spark, s"RENAME TABLE $tmp TO $b")
+            renameTable(spark, tmp, b)
             return okRow(spark, s"EXCHANGE TABLES WITH $b (roll-forward)", a)
           } else throw new IllegalStateException(
             s"EXCHANGE TABLES $a AND $b: intermediate $tmp exists alongside " +
@@ -106,12 +110,12 @@ object GraftSql {
         }
         require(spark.catalog.tableExists(a) && spark.catalog.tableExists(b),
           s"EXCHANGE TABLES $a AND $b: both tables must exist")
-        sql(spark, s"RENAME TABLE $a TO $tmp")
-        sql(spark, s"RENAME TABLE $b TO $a")
-        sql(spark, s"RENAME TABLE $tmp TO $b")
+        renameTable(spark, a, tmp)
+        renameTable(spark, b, a)
+        renameTable(spark, tmp, b)
         okRow(spark, s"EXCHANGE TABLES WITH $b", a)
-      case CreateDictRe(ifne, name, colsBlock, key, tail) =>
-        createDictionary(spark, ifne != null, name, colsBlock, key, tail)
+      case CreateDict(ifne, name, cols, key, tail) =>
+        createDictionary(spark, ifne.nonEmpty, name.name, cols, key.text, tail)
       // ClickHouse's most-used operational construct: the
       // insert-maintained aggregate. `CREATE MATERIALIZED VIEW mv
       // ENGINE = SummingMergeTree() ORDER BY keys [POPULATE] AS
@@ -123,8 +127,8 @@ object GraftSql {
       // exactly SummingMergeTree's own contract (rows with equal keys
       // COEXIST until merged; ClickHouse users query the MV with FINAL
       // or sum() for the same reason).
-      case CreateMatViewRe(ifne, name, middle, body) =>
-        createMatView(spark, ifne != null, name, middle.trim, body.trim)
+      case CreateMatView(ifne, name, middle, body) =>
+        createMatView(spark, ifne.nonEmpty, name.name, middle, body.text)
       // Inline-data INSERT forms — `INSERT INTO t FORMAT
       // Values/JSONEachRow/CSV/TSV <rows…>` — the spelling ClickHouse
       // clients and operator scripts emit constantly (r13 verdict
@@ -133,29 +137,29 @@ object GraftSql {
       // — bulk loads are files, INSERT … SELECT reads them
       // distributed), then takes the SAME append + MV-maintenance path
       // as every other insert. Unsupported formats refuse BY NAME.
-      case InsertFormatRe(table, fmt, data) =>
-        insertFormat(spark, table, fmt, data)
+      case InsertFormat(_, table, fmt) if data.nonEmpty =>
+        insertFormat(spark, table.name, fmt.text, data)
       // INSERT INTO a table that feeds registered materialized views:
       // the batch is computed once as a DataFrame, appended to the
       // table, and each MV receives the batch's aggregated partials —
       // ClickHouse's insert-block trigger semantics. Every other
       // INSERT falls through untouched.
-      case InsertRe(table, rest) if mvsOn(spark, table).nonEmpty =>
-        insertWithMvs(spark, table, rest.trim)
+      case Insert(_, table, rest) if mvsOn(spark, table.name).nonEmpty =>
+        insertWithMvs(spark, table.name, rest.text)
       // INSERT OVERWRITE replaces the table wholesale — the standing MV
       // partials would silently describe rows that no longer exist
-      case InsertOverwriteRe(table, _) if mvsOn(spark, table).nonEmpty =>
+      case InsertOverwrite(_, t, _) if mvsOn(spark, t.name).nonEmpty =>
         throw new IllegalArgumentException(
-          s"INSERT OVERWRITE $table would invalidate the materialized " +
-            s"view(s) ${mvsOn(spark, table).map(_.mv).mkString(", ")} — " +
+          s"INSERT OVERWRITE ${t.name} would invalidate the materialized " +
+            s"view(s) ${mvsOn(spark, t.name).map(_.mv).mkString(", ")} — " +
             "DROP TABLE the MV first (and re-CREATE … POPULATE after), " +
             "or append with INSERT INTO")
       // TRUNCATE empties the table wholesale — same stale-partials
       // hazard as INSERT OVERWRITE, refused under the same rule
-      case TruncateRe(table) if mvsOn(spark, table).nonEmpty =>
+      case Truncate(_, t) if mvsOn(spark, t.name).nonEmpty =>
         throw new IllegalArgumentException(
-          s"TRUNCATE TABLE $table would orphan the partials of " +
-            s"materialized view(s) ${mvsOn(spark, table).map(_.mv).mkString(", ")} — " +
+          s"TRUNCATE TABLE ${t.name} would orphan the partials of " +
+            s"materialized view(s) ${mvsOn(spark, t.name).map(_.mv).mkString(", ")} — " +
             "DROP TABLE the MV first (and re-CREATE after the truncate)")
       // DROP TABLE of a materialized view unregisters its maintenance.
       // The Spark DDL runs FIRST: a failing DROP (missing table without
@@ -165,26 +169,21 @@ object GraftSql {
       // discipline's mirror image). The TO/table-backed split reads the
       // EXPLICIT toForm marker — simple-name inequality misclassified
       // cross-database `… db1.stats TO db2.stats` (r14 ADVICE).
-      case DropTableRe(_, name)
-          if spark.conf.getOption(s"graft.mv.${name.split('.').last}").isDefined =>
-        val simple = name.split('.').last
-        val d = decodeMv(spark.conf.get(s"graft.mv.$simple"))
-        val out =
-          if (d.toForm) {
-            // TO-form MV: the catalog object is a VIEW over the target
-            // table; DROP drops the view and its maintenance, the
-            // target table and ITS collapse registration survive
-            // (ClickHouse's own TO semantics)
-            spark.sql(stmt.replaceFirst("(?i)^DROP\\s+TABLE", "DROP VIEW"))
-            spark.conf.unset(s"graft.mv.$simple")
-            okRow(spark, "DROP MATERIALIZED VIEW (TO-form)", name)
-          } else {
-            val r = spark.sql(stmt)
-            spark.conf.unset(s"graft.mv.$simple")
-            unregisterTable(spark, simple)
-            r
-          }
-        out
+      case DropTable(ifex, n) if spark.conf.getOption(s"graft.mv.${n.simple}").isDefined =>
+        if (decodeMv(spark.conf.get(s"graft.mv.${n.simple}")).toForm) {
+          // TO-form MV: the catalog object is a VIEW over the target
+          // table; DROP drops the view and its maintenance, the
+          // target table and ITS collapse registration survive
+          // (ClickHouse's own TO semantics)
+          spark.sql(s"DROP VIEW ${ifex.text} ${n.name}")
+          spark.conf.unset(s"graft.mv.${n.simple}")
+          okRow(spark, "DROP MATERIALIZED VIEW (TO-form)", n.name)
+        } else {
+          val r = spark.sql(stmt)
+          spark.conf.unset(s"graft.mv.${n.simple}")
+          unregisterTable(spark, n.simple)
+          r
+        }
       // the natural DROP spelling for a TO-form MV (it IS a catalog
       // VIEW): without this arm the statement fell through to Spark,
       // dropped the view, and left the trigger registration standing —
@@ -192,11 +191,10 @@ object GraftSql {
       // target after the MV was gone (r14 ADVICE). Spark's DROP runs
       // first: dropping a table-backed MV name this way fails there
       // ("not a view") and the registration survives, correctly.
-      case DropViewRe(_, name)
-          if spark.conf.getOption(s"graft.mv.${name.split('.').last}").isDefined =>
+      case DropView(_, n) if spark.conf.getOption(s"graft.mv.${n.simple}").isDefined =>
         spark.sql(stmt)
-        spark.conf.unset(s"graft.mv.${name.split('.').last}")
-        okRow(spark, "DROP MATERIALIZED VIEW (TO-form)", name)
+        spark.conf.unset(s"graft.mv.${n.simple}")
+        okRow(spark, "DROP MATERIALIZED VIEW (TO-form)", n.name)
       // DROP TABLE of a routed-DDL table: the Spark DROP runs first; on
       // success every graft table registration for the name unsets —
       // otherwise SHOW CREATE keeps serving the stale ClickHouse
@@ -204,11 +202,10 @@ object GraftSql {
       // later unrelated table reusing the name. The SNAPSHOT
       // registration survives by design: backups outlive their tables
       // (the reference's whole point).
-      case DropTableRe(_, name)
-          if TableRegKinds.exists(k => spark.conf.getOption(
-            s"graft.$k.${name.split('.').last}").isDefined) =>
+      case DropTable(_, n)
+          if TableRegKinds.exists(k => spark.conf.getOption(s"graft.$k.${n.simple}").isDefined) =>
         val r = spark.sql(stmt)
-        unregisterTable(spark, name.split('.').last)
+        unregisterTable(spark, n.simple)
         r
       // the operator-UX verbs around the DDL surface. RENAME maps onto
       // Spark's own ALTER TABLE … RENAME TO (different spelling, same
@@ -218,80 +215,34 @@ object GraftSql {
       // TRUE no-op here — graft dictionaries read the live source
       // relation on every query, there is no staleness to flush — and
       // answers OK so operator scripts keep working.
-      case RenameTableRe(from, to) =>
-        spark.sql(s"ALTER TABLE $from RENAME TO $to")
-        val (fromSimple, toSimple) = (from.split('.').last, to.split('.').last)
-        // graft.ddl re-homes by key AND rewrites the statement's own
-        // table name below
-        Seq("final", "sample", "sumfinal", "aggfinal", "collapsefinal",
-          "orderby", "partition", "snapshot", "mv", "ddl", "ttl").foreach { kind =>
-            val (f, t) = (s"graft.$kind.$fromSimple", s"graft.$kind.$toSimple")
-            spark.conf.getOption(f).foreach { v =>
-              spark.conf.set(t, v); spark.conf.unset(f)
-            }
-          }
-        // registrations that NAME the renamed table inside their value
-        // re-home too: a dictionary's encoded source (src|key|defaults)
-        // and a materialized view's (mv|src|…) segments — otherwise a
-        // later dictGet / INSERT would read the old name (an error, or
-        // silently a DIFFERENT relation if that name is reused)
-        // the stored SHOW CREATE statement names the table inside its
-        // value — rewrite the head so the returned DDL matches the
-        // table's new name
-        spark.conf.getOption(s"graft.ddl.$toSimple").foreach { v =>
-          spark.conf.set(s"graft.ddl.$toSimple",
-            v.replaceFirst("(?is)^CREATE\\s+TABLE\\s+[\\w.]+", s"CREATE TABLE $to"))
-        }
-        def rehome(seg: String): String =
-          if (seg == from) to else if (seg == fromSimple) toSimple else seg
-        spark.conf.getAll.foreach {
-          case (k, v) if k.startsWith("graft.dict.") =>
-            val parts = v.split("\\|", 3)
-            if (rehome(parts(0)) != parts(0))
-              spark.conf.set(k, (rehome(parts(0)) +: parts.tail.toSeq).mkString("|"))
-          case (k, v) if k.startsWith("graft.mv.") =>
-            val parts = v.split("\\|", 7)
-            // the broadcast-dim join segment names a table too — its
-            // dim re-homes with the rename like the mv/src segments
-            val moved = (Seq(rehome(parts(0)), rehome(parts(1))) ++
-              parts.drop(2).toSeq).zipWithIndex.map {
-                case (seg, i) if i == 5 && seg.nonEmpty =>
-                  val j = seg.split(";", 3)
-                  (Seq(j(0), rehome(j(1))) ++ j.drop(2).toSeq).mkString(";")
-                case (seg, _) => seg
-              }
-            if (moved != parts.toSeq) spark.conf.set(k, moved.mkString("|"))
-          case _ => ()
-        }
-        okRow(spark, s"RENAME TABLE TO $to", from)
-      case ExistsTableRe(table) =>
+      case RenameTable(from, to) =>
+        renameTable(spark, from.name, to.name)
+      case ExistsTable(_, table) =>
         import spark.implicits._
-        Seq(if (spark.catalog.tableExists(table)) 1 else 0).toDF("result")
-      case DropDictRe(ifex, name) =>
-        val key = s"graft.dict.${name.split('.').last}"
+        Seq(if (spark.catalog.tableExists(table.name)) 1 else 0).toDF("result")
+      case DropDict(ifex, n) =>
+        val key = s"graft.dict.${n.simple}"
         val existed = spark.conf.getOption(key).isDefined
-        require(existed || ifex != null, s"dictionary '$name' is not registered")
+        require(existed || ifex.nonEmpty, s"dictionary '${n.name}' is not registered")
         spark.conf.unset(key)
-        okRow(spark, "DROP DICTIONARY", name)
-      case ReloadDictRe(_) =>
+        okRow(spark, "DROP DICTIONARY", n.name)
+      case ReloadDicts() | ReloadDict(_) =>
         okRow(spark, "SYSTEM RELOAD DICTIONARIES", "-")
       // SHOW CREATE TABLE on a routed-DDL table returns the
       // canonicalized original statement (ClickHouse's behavior — the
       // engine/keys metadata Spark's own SHOW CREATE cannot carry);
       // unregistered tables fall through to Spark's native form
-      case ShowCreateRe(table)
-          if spark.conf.getOption(s"graft.ddl.${table.split('.').last}").isDefined =>
+      case ShowCreate(_, t) if spark.conf.getOption(s"graft.ddl.${t.simple}").isDefined =>
         import spark.implicits._
-        Seq(spark.conf.get(s"graft.ddl.${table.split('.').last}"))
-          .toDF("statement")
-      case BackupDbRe(db, destRaw, settings) =>
-        backupDatabase(spark, db, destRaw.trim, parseSettings(Option(settings)))
-      case BackupTableRe(table, destRaw, settings) =>
-        backupTable(spark, table, destRaw.trim, parseSettings(Option(settings)))
-      case RestoreDbRe(db, destRaw) =>
-        restoreDatabase(spark, db, destRaw.trim)
-      case RestoreTableRe(table, destRaw) =>
-        restoreTable(spark, table, destRaw.trim)
+        Seq(spark.conf.get(s"graft.ddl.${t.simple}")).toDF("statement")
+      case BackupDb(db, dest, settings, _) =>
+        backupDatabase(spark, db.name, dest, parseSettings(spark, settings))
+      case BackupTable(table, dest, settings, _) =>
+        backupTable(spark, table.name, dest, parseSettings(spark, settings))
+      case RestoreDb(db, dest) =>
+        restoreDatabase(spark, db.name, dest)
+      case RestoreTable(table, dest) =>
+        restoreTable(spark, table.name, dest)
       // `ALTER TABLE t MODIFY TTL <expr>` / `REMOVE TTL` — how a
       // ClickHouse user changes retention on a LIVE table (the
       // companion verbs to the routed CREATE-time TTL). MODIFY
@@ -301,33 +252,31 @@ object GraftSql {
       // own materialize-on-merge behavior. Works on any catalog table,
       // routed or plain (adding TTL to an existing table is the
       // canonical use). REMOVE TTL unsets both.
-      case ModifyTtlRe(table, body) =>
-        modifyTtl(spark, table, body.trim)
-      case RemoveTtlRe(table) =>
-        require(spark.catalog.tableExists(table),
-          s"ALTER TABLE $table REMOVE TTL: no such table")
-        val simple = table.split('.').last
-        spark.conf.unset(s"graft.ttl.$simple")
-        spark.conf.getOption(s"graft.ddl.$simple").foreach { ddl =>
-          spark.conf.set(s"graft.ddl.$simple",
+      case ModifyTtl(table, body) =>
+        modifyTtl(spark, table.name, body.text)
+      case RemoveTtl(t) =>
+        require(spark.catalog.tableExists(t.name),
+          s"ALTER TABLE ${t.name} REMOVE TTL: no such table")
+        spark.conf.unset(s"graft.ttl.${t.simple}")
+        spark.conf.getOption(s"graft.ddl.${t.simple}").foreach { ddl =>
+          spark.conf.set(s"graft.ddl.${t.simple}",
             ddl.replaceAll(StoredTtlRe, "").replaceAll("\\s+", " ").trim)
         }
-        okRow(spark, "REMOVE TTL", table)
-      case AlterDeleteRe(table, pred) =>
-        report(spark, "DELETE", table,
-          operators.Snapshot.delete(spark, snapshotDirOf(spark, table), expr(pred.trim)))
+        okRow(spark, "REMOVE TTL", t.name)
+      case AlterDelete(table, pred) =>
+        report(spark, "DELETE", table.name,
+          operators.Snapshot.delete(spark, snapshotDirOf(spark, table.name), expr(pred.text)))
       // ADD/DROP COLUMN route to the snapshot engine only for tables
       // with a REGISTERED snapshot; otherwise they are Spark's own
       // catalog DDL and must fall through untouched
-      case AddColRe(table, name, dtype, dflt)
-          if spark.conf.getOption(s"graft.snapshot.$table").isDefined =>
-        operators.Snapshot.addColumn(spark, snapshotDirOf(spark, table),
-          name, dflt.trim, dtype.trim)
-        okRow(spark, s"ADD COLUMN $name", table)
-      case DropColRe(table, name)
-          if spark.conf.getOption(s"graft.snapshot.$table").isDefined =>
-        operators.Snapshot.dropColumn(spark, snapshotDirOf(spark, table), name)
-        okRow(spark, s"DROP COLUMN $name", table)
+      case AddCol(t, name, dtype, dflt)
+          if spark.conf.getOption(s"graft.snapshot.${t.name}").isDefined =>
+        operators.Snapshot.addColumn(spark, snapshotDirOf(spark, t.name),
+          name.name, dflt.text, dtype.text)
+        okRow(spark, s"ADD COLUMN ${name.name}", t.name)
+      case DropCol(t, name) if spark.conf.getOption(s"graft.snapshot.${t.name}").isDefined =>
+        operators.Snapshot.dropColumn(spark, snapshotDirOf(spark, t.name), name.name)
+        okRow(spark, s"DROP COLUMN ${name.name}", t.name)
       // the partition lifecycle family — ClickHouse 24.8's day-2
       // operational verbs (the version the reference pins,
       // Dockerfile:2) — routed onto the spec'd Snapshot engines:
@@ -336,27 +285,27 @@ object GraftSql {
       // data rewrite; REPLACE adopts the source's version of a day with
       // copy semantics. All require a registered snapshot (BACKUP first
       // or SET graft.snapshot.<table>).
-      case DetachPartRe(table, day) =>
-        operators.Snapshot.detachPartition(spark, snapshotDirOf(spark, table), day)
-        okRow(spark, s"DETACH PARTITION $day", table)
-      case AttachPartRe(table, day) =>
-        operators.Snapshot.attachPartition(spark, snapshotDirOf(spark, table), day)
-        okRow(spark, s"ATTACH PARTITION $day", table)
-      case DropPartRe(table, day) =>
-        operators.Snapshot.dropPartition(spark, snapshotDirOf(spark, table), day)
-        okRow(spark, s"DROP PARTITION $day", table)
-      case MovePartRe(table, day, dstTable) =>
-        operators.Snapshot.movePartition(spark, snapshotDirOf(spark, table),
-          snapshotDirOf(spark, dstTable), day)
-        okRow(spark, s"MOVE PARTITION $day TO TABLE $dstTable", table)
-      case ReplacePartRe(table, day, srcTable) =>
-        operators.Snapshot.replacePartition(spark, snapshotDirOf(spark, srcTable),
-          snapshotDirOf(spark, table), day)
-        okRow(spark, s"REPLACE PARTITION $day FROM $srcTable", table)
-      case AlterUpdateRe(table, rest) =>
-        alterUpdate(spark, table, rest)
-      case OptimizeRe(table, dedup) =>
-        optimize(spark, table, dedup != null)
+      case DetachPart(t, day) =>
+        operators.Snapshot.detachPartition(spark, snapshotDirOf(spark, t.name), day.name)
+        okRow(spark, s"DETACH PARTITION ${day.name}", t.name)
+      case AttachPart(t, day) =>
+        operators.Snapshot.attachPartition(spark, snapshotDirOf(spark, t.name), day.name)
+        okRow(spark, s"ATTACH PARTITION ${day.name}", t.name)
+      case DropPart(t, day) =>
+        operators.Snapshot.dropPartition(spark, snapshotDirOf(spark, t.name), day.name)
+        okRow(spark, s"DROP PARTITION ${day.name}", t.name)
+      case MovePart(t, day, dst) =>
+        operators.Snapshot.movePartition(spark, snapshotDirOf(spark, t.name),
+          snapshotDirOf(spark, dst.name), day.name)
+        okRow(spark, s"MOVE PARTITION ${day.name} TO TABLE ${dst.name}", t.name)
+      case ReplacePart(t, day, src) =>
+        operators.Snapshot.replacePartition(spark, snapshotDirOf(spark, src.name),
+          snapshotDirOf(spark, t.name), day.name)
+        okRow(spark, s"REPLACE PARTITION ${day.name} FROM ${src.name}", t.name)
+      case AlterUpdate(table, rest) =>
+        alterUpdate(spark, table.name, rest)
+      case Optimize(table, dedup) =>
+        optimize(spark, table.name, dedup.nonEmpty)
       // ClickHouse's EXPLAIN family, routed onto the engine's
       // introspection surfaces. Spark's own EXPLAIN verbs
       // ([EXTENDED|CODEGEN|COST|FORMATTED|LOGICAL]) fall through
@@ -369,13 +318,13 @@ object GraftSql {
       //    strategies, exchanges, windows, codegen spans).
       //  - ESTIMATE: the one-row plan-shape dashboard
       //    (plans.Introspect.summary).
-      case ExplainSyntaxRe(rest) =>
+      case ExplainSyntax(rest) =>
         import spark.implicits._
-        Seq(plans.Dialect.translate(spark, rest.trim)).toDF("statement")
-      case ExplainPlanRe(rest) =>
-        plans.Introspect.explain(spark.sql(plans.Dialect.translate(spark, rest.trim)))
-      case ExplainEstimateRe(rest) =>
-        plans.Introspect.summary(spark.sql(plans.Dialect.translate(spark, rest.trim)))
+        Seq(plans.Dialect.translate(spark, rest.text)).toDF("statement")
+      case ExplainPlan(rest) if rest.up(0) == "SELECT" || rest.up(0) == "WITH" =>
+        plans.Introspect.explain(spark.sql(plans.Dialect.translate(spark, rest.text)))
+      case ExplainEstimate(rest) =>
+        plans.Introspect.summary(spark.sql(plans.Dialect.translate(spark, rest.text)))
       // fallthrough: the full SQL surface, via the ClickHouse-dialect
       // translator ([[plans.Dialect]]) — identity (byte-for-byte) on
       // ANSI/Spark text, so native statements are untouched; dialect
@@ -387,72 +336,175 @@ object GraftSql {
   }
 
   // ── grammar ────────────────────────────────────────────────────────
-  // (?is): case-insensitive, DOTALL — predicates/defaults may span lines
 
-  private val BackupDbRe =
-    """(?is)^BACKUP\s+DATABASE\s+(\w+)\s+TO\s+(.+?)(?:\s+SETTINGS\s+(.+))?$""".r
-  private val BackupTableRe =
-    """(?is)^BACKUP\s+TABLE\s+([\w.]+)\s+TO\s+(.+?)(?:\s+SETTINGS\s+(.+))?$""".r
-  private val RestoreDbRe =
-    """(?is)^RESTORE\s+DATABASE\s+(\w+)\s+FROM\s+(.+)$""".r
-  private val RestoreTableRe =
-    """(?is)^RESTORE\s+TABLE\s+([\w.]+)\s+FROM\s+(.+)$""".r
-  private val ModifyTtlRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+MODIFY\s+TTL\s+(.+)$""".r
-  private val RemoveTtlRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+REMOVE\s+TTL$""".r
-  private val AlterDeleteRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DELETE\s+WHERE\s+(.+)$""".r
-  private val AlterUpdateRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+UPDATE\s+(.+)$""".r
+  /** A run of one statement's [[plans.Dialect.lexAt]] tokens, comments
+    * dropped. Its `text` is the source slice from its first token to its
+    * last, byte for byte, so a predicate, default or SELECT body reaches
+    * `expr` / `Dialect.translate` / `spark.sql` as it was typed. Every
+    * search and split below runs at paren depth 0 of the run.
+    */
+  private final case class Frag(src: String, ts: Vector[Lexeme]) {
+    def text: String = if (ts.isEmpty) "" else src.substring(ts.head.at, ts.last.end)
+    def size: Int = ts.length
+    def nonEmpty: Boolean = ts.nonEmpty
+    def slice(from: Int, until: Int): Frag = copy(ts = ts.slice(from, until))
+    def drop(k: Int): Frag = slice(k, size)
+    def tok(i: Int): Option[Tok] = ts.lift(i).map(_.tok)
+    /** The upper-cased word at `i`; "" for any other token or none. */
+    def up(i: Int): String = tok(i) match { case Some(w: Word) => w.up; case _ => "" }
+    /** Paren depth before each token, and after the last. */
+    private lazy val depth: Vector[Int] = ts.scanLeft(0) { (d, l) =>
+      l.tok match { case Punct("(") => d + 1; case Punct(")") => d - 1; case _ => d }
+    }
+    def top(i: Int): Boolean = depth(i) == 0
+    /** The index of the `)` that closes a `(` at `i`; -1 if none. */
+    def close(i: Int): Int =
+      if (!tok(i).contains(Punct("("))) -1
+      else (i + 1 until size).find(j => depth(j + 1) == depth(i)).getOrElse(-1)
+    /** A name or partition id: `db`.`t` → db.t, '20240101' → 20240101. */
+    def name: String = ts.map(_.tok match {
+      case t @ (_: Quoted | _: Str) => unquote(t)
+      case t => t.text
+    }).mkString
+    def simple: String = name.split('.').last
+    /** The run cut at its top-level commas, empty items dropped. */
+    def commas: Seq[Frag] = {
+      val cuts = (0 until size).filter(i => top(i) && tok(i).contains(Punct(",")))
+      (-1 +: cuts).zip(cuts :+ size).map { case (a, b) => slice(a + 1, b) }.filter(_.nonEmpty)
+    }
+    def items: Seq[String] = commas.map(_.text)
+    /** The inside of a run that is one parenthesized group; else the run. */
+    def unwrap: Frag = if (size > 1 && close(0) == size - 1) slice(1, size - 1) else this
+    /** The run cut at each top-level keyword of `kws` (one or more words):
+      * what precedes the first, then each keyword with its run to the next.
+      */
+    def clauses(kws: Seq[String]): (Frag, Seq[(String, Frag)]) = {
+      val hits = (0 until size).filter(top).flatMap { i =>
+        kws.find(_.split(' ').zipWithIndex.forall { case (w, k) => up(i + k) == w }).map(i -> _)
+      }
+      val ends = hits.drop(1).map(_._1) :+ size
+      (slice(0, hits.headOption.fold(size)(_._1)),
+        hits.zip(ends).map { case ((i, kw), e) => kw -> slice(i + kw.count(_ == ' ') + 1, e) })
+    }
+  }
+
+  /** Lex `sql` into one run, comments dropped. */
+  private def frag(sql: String): Frag =
+    Frag(sql, plans.Dialect.lexAt(sql).filterNot(_.tok.isInstanceOf[Raw]))
+
+  /** `stmt` as one run without a trailing `;`. Lexing stops once an
+    * inline-data INSERT's head is read: its rows are sliced raw, never
+    * lexed (a TSV row like `O'Brien<TAB>a--b` holds a lone quote and a
+    * `--`, which would fail the lexer or read as a comment).
+    */
+  private def statement(stmt: String): Frag = {
+    def code(ls: Iterable[Lexeme]) = Frag(stmt, ls.filterNot(_.tok.isInstanceOf[Raw]).toVector)
+    val f = code(plans.Dialect.lexAt(stmt,
+      ls => ls.length <= 12 && InsertFormat.unapplySeq(code(ls)).isDefined))
+    f.slice(0, f.ts.lastIndexWhere(_.tok != Punct(";")) + 1)
+  }
+
+  private sealed trait El
+  private final case class Atom(w: String) extends El // a keyword, punctuation or %-hole
+  private final case class Opt(els: List[El]) extends El
+  private final case class End(from: Int) extends El
+
+  /** A command shape over a run's tokens: a keyword matches its word in
+    * any case (`A|B` either), punctuation itself. Holes, one [[Frag]]
+    * each: `%n` a plain, dotted or backquoted name; `%w` a word; `%p` a
+    * partition id (word, number or quoted word); `%(` a group's inside;
+    * `%?` the shortest top-level run the rest can follow; the rest as
+    * `%+` (non-empty), `%s` (from SELECT) or `%*`. `[…]` is optional and
+    * captures after its own holes (all empty when absent).
+    */
+  private final class Cmd(shape: String) {
+    private def compile(ws: List[String]): List[El] = ws match {
+      case Nil => Nil
+      case w :: _ if w.startsWith("[") =>
+        val n = ws.indexWhere(_.endsWith("]")) + 1
+        Opt(compile(ws.take(n).mkString(" ").drop(1).dropRight(1).split(' ').toList)) ::
+          compile(ws.drop(n))
+      case w :: rest => Atom(w) :: compile(rest)
+    }
+    private val els = compile(shape.split(' ').toList)
+    private def holes(els: List[El]): Int =
+      els.collect { case Atom(w) if w(0) == '%' => 1; case Opt(in) => holes(in) + 1 }.sum
+
+    private def nameEnd(f: Frag, i: Int): Option[Int] = {
+      def part(j: Int) = f.tok(j).exists(t => t.isInstanceOf[Word] || t.text.startsWith("`"))
+      var j = i + 1
+      while (f.tok(j).contains(Punct(".")) && part(j + 1)) j += 2
+      if (part(i)) Some(j) else None
+    }
+
+    private def m(f: Frag, els: List[El], i: Int): Option[List[Frag]] = {
+      def cap(j: Int, rest: List[El]) = m(f, rest, j).map(f.slice(i, j) :: _)
+      els match {
+        case Nil => if (i == f.size) Some(Nil) else None
+        case Atom(w) :: rest if w(0) != '%' =>
+          val hit = if (w(0).isLetter) w.split('|').contains(f.up(i))
+            else f.tok(i).contains(Punct(w))
+          if (hit) m(f, rest, i + 1) else None
+        case Atom("%n") :: rest => nameEnd(f, i).flatMap(cap(_, rest))
+        case Atom("%w") :: rest => f.tok(i).collect { case _: Word => i + 1 }.flatMap(cap(_, rest))
+        case Atom("%p") :: rest => f.tok(i).collect {
+          case _: Word | _: Num => i + 1
+          case s: Str if s.text.matches("'\\w+'") => i + 1
+        }.flatMap(cap(_, rest))
+        case Atom("%(") :: rest => Some(f.close(i)).filter(_ > i)
+          .flatMap(j => m(f, rest, j + 1).map(f.slice(i + 1, j) :: _))
+        case Atom("%?") :: rest =>
+          (i to f.size).iterator.filter(f.top).flatMap(cap(_, rest)).nextOption()
+        case Atom(k) :: rest => // %+, %s or %*: the rest
+          if (k == "%*" || i < f.size && (k == "%+" || f.up(i) == "SELECT")) cap(f.size, rest)
+          else None
+        case Opt(in) :: rest => m(f, in ::: End(i) :: rest, i)
+          .orElse(m(f, rest, i).map(List.fill(holes(in) + 1)(f.slice(i, i)) ::: _))
+        case End(from) :: rest => m(f, rest, i).map(f.slice(from, i) :: _)
+      }
+    }
+
+    def unapplySeq(f: Frag): Option[Seq[Frag]] = m(f, els, 0)
+  }
+
+  private val BackupDb = new Cmd("BACKUP DATABASE %n TO %? [SETTINGS %+]")
+  private val BackupTable = new Cmd("BACKUP TABLE %n TO %? [SETTINGS %+]")
+  private val RestoreDb = new Cmd("RESTORE DATABASE %n FROM %+")
+  private val RestoreTable = new Cmd("RESTORE TABLE %n FROM %+")
+  private val ModifyTtl = new Cmd("ALTER TABLE %n MODIFY TTL %+")
+  private val RemoveTtl = new Cmd("ALTER TABLE %n REMOVE TTL")
+  private val AlterDelete = new Cmd("ALTER TABLE %n DELETE WHERE %+")
+  private val AlterUpdate = new Cmd("ALTER TABLE %n UPDATE %+")
   // partition ids are day buckets (yyyymmdd) — quoted or bare, like
   // ClickHouse's PARTITION '<id>' / PARTITION <expr> forms
-  private val DetachPartRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DETACH\s+PARTITION\s+'?(\w+)'?$""".r
-  private val AttachPartRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+ATTACH\s+PARTITION\s+'?(\w+)'?$""".r
-  private val DropPartRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+PARTITION\s+'?(\w+)'?$""".r
-  private val MovePartRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+MOVE\s+PARTITION\s+'?(\w+)'?\s+TO\s+TABLE\s+([\w.]+)$""".r
-  private val ReplacePartRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+REPLACE\s+PARTITION\s+'?(\w+)'?\s+FROM\s+([\w.]+)$""".r
-  private val AddColRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+COLUMN\s+(\w+)\s+([\w(),]+)\s+DEFAULT\s+(.+)$""".r
-  private val DropColRe =
-    """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+COLUMN\s+(\w+)$""".r
-  private val OptimizeRe =
-    """(?is)^OPTIMIZE\s+TABLE\s+([\w.]+)\s+FINAL(\s+DEDUPLICATE)?$""".r
+  private val DetachPart = new Cmd("ALTER TABLE %n DETACH PARTITION %p")
+  private val AttachPart = new Cmd("ALTER TABLE %n ATTACH PARTITION %p")
+  private val DropPart = new Cmd("ALTER TABLE %n DROP PARTITION %p")
+  private val MovePart = new Cmd("ALTER TABLE %n MOVE PARTITION %p TO TABLE %n")
+  private val ReplacePart = new Cmd("ALTER TABLE %n REPLACE PARTITION %p FROM %n")
+  private val AddCol = new Cmd("ALTER TABLE %n ADD COLUMN %n %? DEFAULT %+")
+  private val DropCol = new Cmd("ALTER TABLE %n DROP COLUMN %n")
+  private val Optimize = new Cmd("OPTIMIZE TABLE %n FINAL [DEDUPLICATE]")
   // ClickHouse DDL: the ENGINE clause is the routing discriminator —
   // Spark's own CREATE TABLE … USING … never has one and falls through
-  private val CreateTableRe =
-    """(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*\((.+)\)\s*ENGINE\s*=\s*(\w+)\s*(?:\(([^)]*)\))?(.*)$""".r
+  private val CreateTable = new Cmd("CREATE TABLE [IF NOT EXISTS] %n %( ENGINE = %w [%(] %*")
   // CTAS: no column block between name and ENGINE; non-greedy tail up
   // to the first top-level AS SELECT
-  private val CreateTableAsRe =
-    """(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+ENGINE\s*=\s*(\w+)\s*(?:\(([^)]*)\))?(.*?)\s+AS\s+(SELECT\b.+)$""".r
-  private val ExchangeTablesRe =
-    """(?is)^EXCHANGE\s+TABLES\s+([\w.]+)\s+AND\s+([\w.]+)$""".r
-  private val CreateDictRe =
-    """(?is)^CREATE\s+DICTIONARY\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*\((.+)\)\s*PRIMARY\s+KEY\s+(\w+)(.*)$""".r
+  private val CreateTableAs =
+    new Cmd("CREATE TABLE [IF NOT EXISTS] %n ENGINE = %w [%(] %? AS %s")
+  private val ExchangeTables = new Cmd("EXCHANGE TABLES %n AND %n")
+  private val CreateDict = new Cmd("CREATE DICTIONARY [IF NOT EXISTS] %n %( PRIMARY KEY %w %*")
   // non-greedy middle: everything up to the FIRST `AS SELECT` is the
   // engine/keys/POPULATE clause block (none of those may contain AS)
-  private val CreateMatViewRe =
-    """(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+(.*?)\s+AS\s+(SELECT\b.+)$""".r
-  private val InsertRe =
-    """(?is)^INSERT\s+INTO\s+(?:TABLE\s+)?([\w.]+)\s+(.+)$""".r
+  private val CreateMatView = new Cmd("CREATE MATERIALIZED VIEW [IF NOT EXISTS] %n %? AS %s")
+  private val Insert = new Cmd("INSERT INTO [TABLE] %n %+")
   // FORMAT must directly follow the table name — `INSERT INTO t
   // SELECT … FORMAT x` is a SELECT-level clause and never matches here
-  private val InsertFormatRe =
-    """(?is)^INSERT\s+INTO\s+(?:TABLE\s+)?([\w.]+)\s+FORMAT\s+(\w+)\s+(.+)$""".r
-  private val InsertOverwriteRe =
-    """(?is)^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.]+)\s+(.+)$""".r
-  private val TruncateRe =
-    """(?is)^TRUNCATE\s+(?:TABLE\s+)?([\w.]+)$""".r
-  private val DropTableRe =
-    """(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)$""".r
-  private val DropViewRe =
-    """(?is)^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.]+)$""".r
+  private val InsertFormat = new Cmd("INSERT INTO [TABLE] %n FORMAT %w")
+  private val InsertOverwrite = new Cmd("INSERT OVERWRITE [TABLE] %n %+")
+  private val Truncate = new Cmd("TRUNCATE [TABLE] %n")
+  private val DropTable = new Cmd("DROP TABLE [IF EXISTS] %n")
+  private val DropView = new Cmd("DROP VIEW [IF EXISTS] %n")
 
   /** The per-table graft registrations DROP TABLE clears (on success).
     * `snapshot` is deliberately absent — a backup outlives its table.
@@ -462,63 +514,50 @@ object GraftSql {
 
   private def unregisterTable(spark: SparkSession, simple: String): Unit =
     TableRegKinds.foreach(k => spark.conf.unset(s"graft.$k.$simple"))
-  private val RenameTableRe =
-    """(?is)^RENAME\s+TABLE\s+([\w.]+)\s+TO\s+([\w.]+)$""".r
-  private val ExistsTableRe = """(?is)^EXISTS\s+(?:TABLE\s+)?([\w.]+)$""".r
-  private val DropDictRe =
-    """(?is)^DROP\s+DICTIONARY\s+(IF\s+EXISTS\s+)?([\w.]+)$""".r
-  private val ReloadDictRe =
-    """(?is)^SYSTEM\s+RELOAD\s+(DICTIONARIES|DICTIONARY\s+[\w.]+)$""".r
-  private val ShowCreateRe =
-    """(?is)^SHOW\s+CREATE\s+(?:TABLE\s+)?([\w.]+)$""".r
-  private val ExplainSyntaxRe = """(?is)^EXPLAIN\s+SYNTAX\s+(.+)$""".r
-  private val ExplainPlanRe = """(?is)^EXPLAIN\s+(?:PLAN|PIPELINE)\s+(SELECT\b.+|WITH\b.+)$""".r
-  private val ExplainEstimateRe = """(?is)^EXPLAIN\s+ESTIMATE\s+(.+)$""".r
-  private val DiskRe = """(?is)^Disk\(\s*'([^']*)'\s*,\s*'([^']*)'\s*\)$""".r
-  private val PathRe = """(?s)^'([^']*)'$""".r
-  private val SettingRe = """(?is)^\s*(\w+)\s*=\s*'([^']*)'\s*$""".r
-  private val DiskSettingRe = """(?is)^\s*(\w+)\s*=\s*(Disk\(.+\))\s*$""".r
-  private val AssignRe = """(?s)^\s*(\w+)\s*=(?!=)\s*(.+)$""".r
+  private val RenameTable = new Cmd("RENAME TABLE %n TO %n")
+  private val ExistsTable = new Cmd("EXISTS [TABLE] %n")
+  private val DropDict = new Cmd("DROP DICTIONARY [IF EXISTS] %n")
+  private val ReloadDicts = new Cmd("SYSTEM RELOAD DICTIONARIES")
+  private val ReloadDict = new Cmd("SYSTEM RELOAD DICTIONARY %n")
+  private val ShowCreate = new Cmd("SHOW CREATE [TABLE] %n")
+  private val ExplainSyntax = new Cmd("EXPLAIN SYNTAX %+")
+  private val ExplainPlan = new Cmd("EXPLAIN PLAN|PIPELINE %+")
+  private val ExplainEstimate = new Cmd("EXPLAIN ESTIMATE %+")
 
-  /** `Disk('name', 'obj')` → `${graft.disk.name}/obj`; `'path'` → path. */
-  private def parseDest(spark: SparkSession, raw: String): String = raw match {
-    case DiskRe(name, obj) =>
-      val root = spark.conf.getOption(s"graft.disk.$name").getOrElse(
-        throw new IllegalArgumentException(
-          s"unknown disk '$name' — SET graft.disk.$name = <root path> first " +
-            "(ClickHouse declares backup disks in storage config; graft " +
-            "declares them in session conf)"))
-      root.stripSuffix("/") + "/" + obj
-    case PathRe(path) => path
-    case other => throw new IllegalArgumentException(
-      s"cannot parse backup destination: $other — expected 'path' or Disk('name', 'object')")
+  /** A quoted token's content; a literal holding a quote is refused, not read escaped. */
+  private def unquote(t: Tok): String = {
+    val s = t.text.substring(1, t.text.length - 1)
+    require(t.isInstanceOf[Quoted] || !s.contains('\''), s"escaped quote in ${t.text}")
+    s
   }
 
-  private def parseSettings(s: Option[String]): Map[String, String] =
-    s.fold(Map.empty[String, String]) { text =>
-      splitTopLevelCommas(text).map {
-        case SettingRe(k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
-        // a Disk('name','obj') value stays raw; its reader resolves it
-        // through parseDest like any destination (base_backup's form)
-        case DiskSettingRe(k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
-        case bad => throw new IllegalArgumentException(
-          s"cannot parse SETTINGS entry: $bad — expected key = 'value' or key = Disk('name', 'object')")
-      }.toMap
-    }
+  /** `Disk('name', 'obj')` → `${graft.disk.name}/obj`; `'path'` → path. */
+  private def parseDest(spark: SparkSession, raw: Frag): String = raw.ts.map(_.tok) match {
+    case Seq(Word(d), Punct("("), name: Str, Punct(","), obj: Str, Punct(")"))
+        if d.equalsIgnoreCase("Disk") =>
+      val root = spark.conf.getOption(s"graft.disk.${unquote(name)}").getOrElse(
+        throw new IllegalArgumentException(
+          s"unknown disk '${unquote(name)}' — SET graft.disk.${unquote(name)} = <root path> " +
+            "first (ClickHouse declares backup disks in storage config; graft " +
+            "declares them in session conf)"))
+      root.stripSuffix("/") + "/" + unquote(obj)
+    case Seq(path: Str) => unquote(path)
+    case _ => throw new IllegalArgumentException(
+      s"cannot parse backup destination: ${raw.text} — expected 'path' or Disk('name', 'object')")
+  }
 
-  /** `SETTINGS base_backup = '<dir>' | Disk('name', 'obj')` — the
-    * ClickHouse 24.8 incremental-backup knob that makes the
-    * reference's `@daily` re-backup (Dockerfile:20) affordable: only
-    * day partitions whose content digest differs from the base's
-    * manifest are re-written ([[operators.Snapshot.backupIncremental]]).
-    */
-  private def baseBackupOf(spark: SparkSession,
-      settings: Map[String, String]): Option[String] =
-    settings.get("base_backup").map { raw =>
-      if (raw.trim.toLowerCase(java.util.Locale.ROOT).startsWith("disk("))
-        parseDest(spark, raw.trim)
-      else raw // SettingRe already stripped the quotes: a plain path
-    }
+  private def parseSettings(spark: SparkSession, s: Frag): Map[String, String] =
+    s.commas.map { e =>
+      e.ts.map(_.tok) match {
+        case Seq(Word(k), Punct("="), v: Str) => k.toLowerCase(java.util.Locale.ROOT) -> unquote(v)
+        // a Disk('name','obj') value resolves through parseDest like any
+        // destination (base_backup's form)
+        case Word(k) +: Punct("=") +: Word(d) +: _ if d.equalsIgnoreCase("Disk") =>
+          k.toLowerCase(java.util.Locale.ROOT) -> parseDest(spark, e.drop(2))
+        case _ => throw new IllegalArgumentException(s"cannot parse SETTINGS entry: " +
+          s"${e.text} — expected key = 'value' or key = Disk('name', 'object')")
+      }
+    }.toMap
 
   /** The day-bucketing timestamp for a backup: explicit setting, else
     * the first TimestampType column, else a constant epoch (the whole
@@ -537,7 +576,12 @@ object GraftSql {
     */
   private def backupInto(spark: SparkSession, df: DataFrame,
       settings: Map[String, String], dest: String): Long =
-    baseBackupOf(spark, settings) match {
+    // `SETTINGS base_backup = '<dir>' | Disk('name', 'obj')` — the
+    // ClickHouse 24.8 incremental-backup knob that makes the
+    // reference's `@daily` re-backup (Dockerfile:20) affordable: only
+    // day partitions whose content digest differs from the base's
+    // manifest are re-written ([[operators.Snapshot.backupIncremental]])
+    settings.get("base_backup") match {
       case Some(base) =>
         require(!dest.endsWith(".zip"),
           "incremental backup (SETTINGS base_backup) needs the " +
@@ -555,7 +599,7 @@ object GraftSql {
       case None => operators.Snapshot.backup(df, tsColumnOf(df, settings), dest)
     }
 
-  private def backupTable(spark: SparkSession, table: String, destRaw: String,
+  private def backupTable(spark: SparkSession, table: String, destRaw: Frag,
       settings: Map[String, String]): DataFrame = {
     import spark.implicits._
     val dest = parseDest(spark, destRaw)
@@ -571,7 +615,7 @@ object GraftSql {
     * object when the destination carries the reference's
     * `BACKUP_SUFFIX` (one object per (db, bucket), backup.sh:26–34).
     */
-  private def backupDatabase(spark: SparkSession, db: String, destRaw: String,
+  private def backupDatabase(spark: SparkSession, db: String, destRaw: Frag,
       settings: Map[String, String]): DataFrame = {
     import spark.implicits._
     val dest = parseDest(spark, destRaw)
@@ -581,7 +625,7 @@ object GraftSql {
     require(tables.nonEmpty, s"database $db has no tables to back up")
     // incremental database backup: each table chains to ITS OWN base
     // under `<base>/<table>` — the layout BACKUP DATABASE itself writes
-    val base = baseBackupOf(spark, settings)
+    val base = settings.get("base_backup")
     require(base.isEmpty || !dest.endsWith(".zip"),
       "incremental backup (SETTINGS base_backup) needs the partitioned-directory arm")
     def tableSettings(t: String): Map[String, String] =
@@ -624,7 +668,7 @@ object GraftSql {
     table.split('.').last
 
   private def restoreTable(spark: SparkSession, table: String,
-      destRaw: String): DataFrame = {
+      destRaw: Frag): DataFrame = {
     val dest = parseDest(spark, destRaw)
     val df = operators.Snapshot.resolve(spark, materializeDir(spark, dest))
     df.createOrReplaceTempView(viewName(table))
@@ -632,7 +676,7 @@ object GraftSql {
   }
 
   private def restoreDatabase(spark: SparkSession, db: String,
-      destRaw: String): DataFrame = {
+      destRaw: Frag): DataFrame = {
     import spark.implicits._
     val dest = parseDest(spark, destRaw)
     val dir = materializeDir(spark, dest)
@@ -665,15 +709,17 @@ object GraftSql {
   }
 
   private def alterUpdate(spark: SparkSession, table: String,
-      rest: String): DataFrame = {
-    val whereAt = lastTopLevelKeyword(rest, "WHERE")
+      rest: Frag): DataFrame = {
+    val whereAt = (0 until rest.size).lastIndexWhere(i => rest.top(i) && rest.up(i) == "WHERE")
     require(whereAt >= 0, "ALTER TABLE … UPDATE requires a WHERE clause")
-    val assigns = splitTopLevelCommas(rest.substring(0, whereAt)).map {
-      case AssignRe(name, e) => name -> expr(e.trim)
-      case bad => throw new IllegalArgumentException(
-        s"cannot parse UPDATE assignment: $bad — expected column = expression")
+    val assigns = rest.slice(0, whereAt).commas.map { a =>
+      a.ts.map(_.tok) match {
+        case Word(name) +: Punct("=") +: e if e.nonEmpty => name -> expr(a.drop(2).text)
+        case _ => throw new IllegalArgumentException(
+          s"cannot parse UPDATE assignment: ${a.text} — expected column = expression")
+      }
     }.toMap
-    val pred = expr(rest.substring(whereAt + "WHERE".length).trim)
+    val pred = expr(rest.drop(whereAt + 1).text)
     report(spark, "UPDATE", table,
       operators.Snapshot.update(spark, snapshotDirOf(spark, table), pred, assigns))
   }
@@ -761,43 +807,11 @@ object GraftSql {
 
   // ── ClickHouse DDL (CREATE TABLE … ENGINE, CREATE DICTIONARY) ──────
 
-  /** First top-level (outside parens/strings) match of `re` in `s`. */
-  private def topLevelMatches(s: String,
-      re: scala.util.matching.Regex): Seq[scala.util.matching.Regex.Match] = {
-    // paren/string depth at each offset, precomputed once
-    val depth = new Array[Int](s.length + 1)
-    var d = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      depth(i) = d
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    depth(s.length) = d
-    re.findAllMatchIn(s).filter(m => depth(m.start) == 0).toSeq
-  }
-
-  private val DdlClauseRe =
-    """(?is)\b(PARTITION\s+BY|ORDER\s+BY|PRIMARY\s+KEY|SAMPLE\s+BY|TTL|SETTINGS|COMMENT)\b""".r
-
-  /** DDL tail `ORDER BY … PARTITION BY … SAMPLE BY …` → normalized
-    * clause name → body text (sliced between consecutive top-level
-    * clause keywords).
+  /** DDL tail `ORDER BY … PARTITION BY … SAMPLE BY …` → clause name →
+    * body text (sliced between consecutive top-level clause keywords).
     */
-  private def ddlClauses(tail: String): Map[String, String] = {
-    val ms = topLevelMatches(tail, DdlClauseRe)
-    ms.zipWithIndex.map { case (m, i) =>
-      val end = if (i + 1 < ms.length) ms(i + 1).start else tail.length
-      m.group(1).toUpperCase(java.util.Locale.ROOT).replaceAll("\\s+", " ") ->
-        tail.substring(m.end, end).trim
-    }.toMap
-  }
+  private def ddlClauses(tail: Frag): Map[String, Frag] = tail.clauses(Seq("PARTITION BY",
+    "ORDER BY", "PRIMARY KEY", "SAMPLE BY", "TTL", "SETTINGS", "COMMENT"))._2.toMap
 
   /** ClickHouse column type → Spark SQL DDL type. Wrapper erasure
     * (`Nullable`/`LowCardinality` are nullability/encoding metadata —
@@ -816,17 +830,15 @@ object GraftSql {
           case "nullable" | "lowcardinality" => chType(args)
           case "array" => s"ARRAY<${chType(args)}>"
           case "map" =>
-            val kv = splitTopLevelCommas(args)
+            val kv = frag(args).items
             require(kv.length == 2, s"Map needs two type arguments: $t")
             s"MAP<${chType(kv(0))}, ${chType(kv(1))}>"
           case "tuple" =>
-            val fields = splitTopLevelCommas(args).zipWithIndex.map {
+            val fields = frag(args).commas.zipWithIndex.map {
               case (f, i) =>
-                val parts = f.trim.split("\\s+", 2)
-                if (parts.length == 2 && parts(0).forall(c =>
-                    c.isLetterOrDigit || c == '_'))
-                  s"${parts(0)}: ${chType(parts(1))}"
-                else s"_${i + 1}: ${chType(f)}"
+                if (f.up(0).nonEmpty && f.size > 1 && !f.tok(1).contains(Punct("(")))
+                  s"${f.ts.head.tok.text}: ${chType(f.drop(1).text)}"
+                else s"_${i + 1}: ${chType(f.text)}"
             }
             s"STRUCT<${fields.mkString(", ")}>"
           case "string" | "uuid" | "ipv4" | "ipv6" | "fixedstring"
@@ -868,9 +880,6 @@ object GraftSql {
         s"cannot parse ClickHouse column type: $t0")
     }
   }
-
-  private val ColAttrRe =
-    """(?is)\b(DEFAULT|MATERIALIZED|ALIAS|EPHEMERAL|CODEC|COMMENT|TTL)\b""".r
 
   private val SafTypeRe =
     """(?is)^SimpleAggregateFunction\s*\(\s*(\w+)\s*,\s*(.+)\)$""".r
@@ -920,19 +929,16 @@ object GraftSql {
     * the state — with fn carried out for the AggregatingMergeTree
     * registration.
     */
-  private def parseColDefs(block: String): Seq[(String, String, Option[String], Option[String])] =
-    splitTopLevelCommas(block).flatMap { entry =>
-      val e = entry.trim
-      val headWord = e.split("\\s+", 2)(0).toUpperCase(java.util.Locale.ROOT)
-      if (Seq("INDEX", "PROJECTION", "CONSTRAINT").contains(headWord)) None
+  private def parseColDefs(block: Frag): Seq[(String, String, Option[String], Option[String])] =
+    block.commas.flatMap { e =>
+      val entry = e.text
+      if (Seq("INDEX", "PROJECTION", "CONSTRAINT").contains(e.up(0))) None
       else {
-        val sp = e.indexWhere(_.isWhitespace)
-        require(sp > 0, s"cannot parse column definition: $entry")
-        val name = e.substring(0, sp).stripPrefix("`").stripSuffix("`")
-        val rest = e.substring(sp + 1).trim
-        val attrs = topLevelMatches(rest, ColAttrRe)
-        attrs.headOption.foreach { m =>
-          val kw = m.group(1).toUpperCase(java.util.Locale.ROOT)
+        require(e.size > 1, s"cannot parse column definition: $entry")
+        val name = e.slice(0, 1).name
+        val (typ, attrs) = e.drop(1).clauses(
+          Seq("DEFAULT", "MATERIALIZED", "ALIAS", "EPHEMERAL", "CODEC", "COMMENT", "TTL"))
+        attrs.headOption.foreach { case (kw, _) =>
           require(!Seq("MATERIALIZED", "ALIAS", "EPHEMERAL").contains(kw),
             s"$kw columns are computed server-side in ClickHouse and have no " +
               s"table-DDL equivalent here: $entry")
@@ -940,18 +946,13 @@ object GraftSql {
         // a column-level TTL DELETES/zeroes expired values server-side —
         // dropping it would silently return rows ClickHouse would have
         // expired, a worse divergence than the MATERIALIZED refusal
-        require(!attrs.exists(_.group(1).equalsIgnoreCase("TTL")),
+        require(!attrs.exists(_._1 == "TTL"),
           s"column TTL expires values server-side in ClickHouse — not " +
             s"representable as registrable metadata here: $entry. Remove " +
             "the TTL and run the engine's explicit retention operators " +
             "(q_ttl_rollup / q_retention_filter / Snapshot drops) instead")
-        val typeTxt = attrs.headOption.fold(rest)(m => rest.substring(0, m.start)).trim
-        val dflt = attrs.find(_.group(1).equalsIgnoreCase("DEFAULT")).map { m =>
-          val after = rest.substring(m.end)
-          val stop = topLevelMatches(after, ColAttrRe)
-            .headOption.map(_.start).getOrElse(after.length)
-          after.substring(0, stop).trim
-        }
+        val typeTxt = typ.text
+        val dflt = attrs.collectFirst { case ("DEFAULT", d) => d.text }
         typeTxt match {
           case SafTypeRe(fn, inner) =>
             Some((name, chType(inner), dflt,
@@ -1054,8 +1055,8 @@ object GraftSql {
     * table that was never created.
     */
   private def createTable(spark: SparkSession, ifNotExists: Boolean,
-      name: String, colsBlock: String, engine: String, engineArgs: String,
-      tail: String): DataFrame = {
+      name: String, colsBlock: Frag, engine: String, engineArgs: Frag,
+      tail: Frag): DataFrame = {
     import spark.implicits._
     val cols = parseColDefs(colsBlock)
     require(cols.nonEmpty, s"CREATE TABLE $name: no columns")
@@ -1074,7 +1075,7 @@ object GraftSql {
     // VOLUME/DISK tiering, GROUP BY rollups, WHERE, month/year units
     // whose calendar arithmetic diverges) refuses by name.
     val ttlReg: Option[String] = clauses.get("TTL").map { body =>
-      body.trim match {
+      body.text match {
         case TtlDeleteRe(col, n, unit) =>
           require(cols.exists(_._1 == col),
             s"TTL column '$col' is not among the table's columns")
@@ -1091,11 +1092,8 @@ object GraftSql {
             "run q_ttl_rollup / ALTER TABLE … DROP PARTITION explicitly)")
       }
     }
-    val orderKeys = clauses.get("ORDER BY").map { txt =>
-      val inner = if (txt.startsWith("(") && txt.endsWith(")"))
-        txt.substring(1, txt.length - 1) else txt
-      splitTopLevelCommas(inner).filterNot(_.equalsIgnoreCase("tuple()"))
-    }.getOrElse(Nil)
+    val orderKeys = clauses.get("ORDER BY")
+      .map(_.unwrap.items.filterNot(_.equalsIgnoreCase("tuple()"))).getOrElse(Nil)
     // validate now, register only after the CREATE succeeds
     val registerEngine: () => Unit = engine.toLowerCase(java.util.Locale.ROOT) match {
       case "mergetree" | "memory" | "log" | "tinylog" | "stripelog" => () => ()
@@ -1108,7 +1106,7 @@ object GraftSql {
           "ReplacingMergeTree needs ORDER BY keys — they are the collapse " +
             "key FINAL groups by")
         () => plans.Dialect.registerFinal(spark, simpleName, orderKeys,
-          splitTopLevelCommas(engineArgs))
+          engineArgs.items)
       case "summingmergetree" =>
         // sum-collapse IS registrable metadata: keys + summed columns.
         // No argument list = ClickHouse's default (every numeric
@@ -1116,8 +1114,7 @@ object GraftSql {
         require(orderKeys.nonEmpty,
           "SummingMergeTree needs ORDER BY keys — they are the collapse " +
             "key FINAL sums under")
-        val summed = if (engineArgs.isEmpty) Nil
-          else splitTopLevelCommas(engineArgs)
+        val summed = engineArgs.items
         require(summed.forall(c => !orderKeys.contains(c)),
           "SummingMergeTree summed columns cannot include the ORDER BY keys")
         () => plans.Dialect.registerSumFinal(spark, simpleName, orderKeys, summed)
@@ -1159,13 +1156,13 @@ object GraftSql {
         // row pairing, which is split-dependent and not reproducible on
         // a distributed engine — the same determinism-over-order stance
         // as ANY JOIN's pre-collapse.
-        require(engineArgs.nonEmpty && engineArgs.matches("[\\w.]+"),
+        require(engineArgs.nonEmpty && engineArgs.text.matches("[\\w.]+"),
           "CollapsingMergeTree needs its sign column: " +
             "ENGINE = CollapsingMergeTree(sign)")
         require(orderKeys.nonEmpty,
           "CollapsingMergeTree needs ORDER BY keys — they are the collapse " +
             "key the sign-net groups by")
-        val signCol = engineArgs.trim
+        val signCol = engineArgs.text
         require(cols.exists(_._1 == signCol),
           s"CollapsingMergeTree sign column '$signCol' is not among the " +
             "table's columns")
@@ -1182,7 +1179,7 @@ object GraftSql {
         // stage; out-of-order cancels can never eat a newer insert).
         // Same documented divergence from row pairing as the plain
         // engine.
-        val vArgs = splitTopLevelCommas(engineArgs)
+        val vArgs = engineArgs.items
         require(vArgs.length == 2 && vArgs.forall(_.matches("[\\w.]+")),
           "VersionedCollapsingMergeTree needs its sign and version " +
             "columns: ENGINE = VersionedCollapsingMergeTree(sign, version)")
@@ -1216,7 +1213,7 @@ object GraftSql {
           "explicit q_collapse_versioned operator")
     }
     val sampleKey = clauses.get("SAMPLE BY").map { expr0 =>
-      expr0.trim match {
+      expr0.text match {
         case HashedSampleRe(c) => c
         case w if w.matches("[\\w.]+") => w
         case other => throw new IllegalArgumentException(
@@ -1234,14 +1231,14 @@ object GraftSql {
     if (orderKeys.nonEmpty)
       spark.conf.set(s"graft.orderby.$simpleName", orderKeys.mkString(","))
     clauses.get("PARTITION BY").foreach(e =>
-      spark.conf.set(s"graft.partition.$simpleName", e))
+      spark.conf.set(s"graft.partition.$simpleName", e.text))
     // SHOW CREATE TABLE returns the canonicalized original statement
     // (ClickHouse's own behavior) — whitespace-normalized so the text
     // is deterministic however the DDL was line-broken
     val engineTxt = engine +
-      (if (engineArgs.nonEmpty) s"($engineArgs)" else "")
-    val normCols = colsBlock.trim.replaceAll("\\s+", " ")
-    val normTail = tail.trim.replaceAll("\\s+", " ")
+      (if (engineArgs.nonEmpty) s"(${engineArgs.text})" else "")
+    val normCols = colsBlock.text.replaceAll("\\s+", " ")
+    val normTail = tail.text.replaceAll("\\s+", " ")
     spark.conf.set(s"graft.ddl.$simpleName",
       s"CREATE TABLE $name ($normCols) ENGINE = $engineTxt" +
         (if (normTail.nonEmpty) s" $normTail" else ""))
@@ -1260,7 +1257,7 @@ object GraftSql {
     * not an inference).
     */
   private def createTableAs(spark: SparkSession, ifNotExists: Boolean,
-      name: String, engine: String, engineArgs: String, tail: String,
+      name: String, engine: String, engineArgs: Frag, tail: Frag,
       body0: String): DataFrame = {
     import spark.implicits._
     val body = plans.Dialect.translate(spark, body0)
@@ -1273,11 +1270,8 @@ object GraftSql {
         "type is part of the routed contract) and INSERT … SELECT the " +
         "backfill")
     val simpleName = name.split('.').last
-    val orderKeys = clauses.get("ORDER BY").map { txt =>
-      val inner = if (txt.startsWith("(") && txt.endsWith(")"))
-        txt.substring(1, txt.length - 1) else txt
-      splitTopLevelCommas(inner).filterNot(_.equalsIgnoreCase("tuple()"))
-    }.getOrElse(Nil)
+    val orderKeys = clauses.get("ORDER BY")
+      .map(_.unwrap.items.filterNot(_.equalsIgnoreCase("tuple()"))).getOrElse(Nil)
     orderKeys.foreach(k => require(colNames.contains(k),
       s"ORDER BY key '$k' is not among the SELECT's output columns " +
         s"(${colNames.mkString(", ")})"))
@@ -1288,15 +1282,14 @@ object GraftSql {
           "ReplacingMergeTree without an explicit version column collapses " +
             "by INSERTION ORDER — declare ReplacingMergeTree(<version column>)")
         require(orderKeys.nonEmpty, "ReplacingMergeTree needs ORDER BY keys")
-        require(colNames.contains(engineArgs.trim),
-          s"version column '${engineArgs.trim}' is not among the SELECT's " +
+        require(colNames.contains(engineArgs.text),
+          s"version column '${engineArgs.text}' is not among the SELECT's " +
             "output columns")
         () => plans.Dialect.registerFinal(spark, simpleName, orderKeys,
-          Seq(engineArgs.trim))
+          Seq(engineArgs.text))
       case "summingmergetree" =>
         require(orderKeys.nonEmpty, "SummingMergeTree needs ORDER BY keys")
-        val summed = if (engineArgs.isEmpty) Nil
-          else splitTopLevelCommas(engineArgs)
+        val summed = engineArgs.items
         summed.foreach(c => require(colNames.contains(c) && !orderKeys.contains(c),
           s"summed column '$c' must be a non-key output of the SELECT"))
         () => plans.Dialect.registerSumFinal(spark, simpleName, orderKeys, summed)
@@ -1312,8 +1305,8 @@ object GraftSql {
     registerEngine()
     if (orderKeys.nonEmpty)
       spark.conf.set(s"graft.orderby.$simpleName", orderKeys.mkString(","))
-    val engineTxt = engine + (if (engineArgs.nonEmpty) s"($engineArgs)" else "")
-    val normTail = tail.trim.replaceAll("\\s+", " ")
+    val engineTxt = engine + (if (engineArgs.nonEmpty) s"(${engineArgs.text})" else "")
+    val normTail = tail.text.replaceAll("\\s+", " ")
     spark.conf.set(s"graft.ddl.$simpleName",
       s"CREATE TABLE $name ENGINE = $engineTxt" +
         (if (normTail.nonEmpty) s" $normTail" else "") +
@@ -1321,8 +1314,6 @@ object GraftSql {
     Seq(("CREATE TABLE AS SELECT", name, engine, orderKeys.mkString(","), true))
       .toDF("command", "table", "engine", "order_by", "ok")
   }
-
-  private val SourceTableRe = """(?is)\bTABLE\s+'([\w.]+)'""".r
 
   /** `CREATE DICTIONARY d (k T, attr T [DEFAULT lit] …) PRIMARY KEY k
     * SOURCE(… TABLE '<src>' …) LAYOUT(…) [LIFETIME(…)]` — registers
@@ -1336,12 +1327,14 @@ object GraftSql {
     * DEFAULT to pin the exact ClickHouse behavior.
     */
   private def createDictionary(spark: SparkSession, ifNotExists: Boolean,
-      name: String, colsBlock: String, key: String, tail: String): DataFrame = {
+      name: String, colsBlock: Frag, key: String, tail: Frag): DataFrame = {
     import spark.implicits._
     val cols = parseColDefs(colsBlock)
     require(cols.exists(_._1 == key),
       s"PRIMARY KEY $key is not among the dictionary's columns")
-    val src = SourceTableRe.findFirstMatchIn(tail).map(_.group(1)).getOrElse(
+    val src = tail.ts.map(_.tok).sliding(2).collectFirst {
+      case Seq(w: Word, s: Str) if w.up == "TABLE" && s.text.matches("'[\\w.]+'") => unquote(s)
+    }.getOrElse(
       throw new IllegalArgumentException(
         "CREATE DICTIONARY needs SOURCE(… TABLE '<table>' …) — the relation " +
           "the dictionary reads"))
@@ -1438,17 +1431,16 @@ object GraftSql {
       .select((d.keys ++ d.aggs.map(_._1)).map(col): _*)
   }
 
-  private val MvEngineRe = """(?is)\bENGINE\s*=\s*(\w+)\s*(?:\(([^)]*)\))?""".r
-  private val MvToRe = """(?is)^TO\s+([\w.]+)\s*$""".r
+  private val MvEngine = new Cmd("= %w [%(] %*") // after the ENGINE keyword
+  private val MvTo = new Cmd("TO %n")
   // the join segment AFTER the JOIN keyword: `<dim> ON <cond>`
-  private val MvJoinRe = """(?is)^([\w.]+)\s+ON\s+(.+)$""".r
+  private val MvJoin = new Cmd("%n ON %+")
+  private val MvFrom = new Cmd("%n %*") // `src [INNER|LEFT]` before a JOIN
   // the body arrives DIALECT-TRANSLATED, so uniqState shows up as its
   // Spark spelling hll_sketch_agg
   private val MvAggItemRe =
     """(?is)^(sum|count|min|max|avg|hll_sketch_agg)\s*\((.*)\)\s+AS\s+(\w+)$""".r
   private val MvKeyItemRe = """(?is)^([\w.]+)(?:\s+AS\s+(\w+))?$""".r
-  private val MvClauseRe =
-    """(?is)\b(FROM|WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|JOIN|UNION)\b""".r
 
   /** `CREATE MATERIALIZED VIEW mv ENGINE = SummingMergeTree() ORDER BY
     * keys [POPULATE] AS SELECT keys…, sum/count… FROM src [WHERE …]
@@ -1479,7 +1471,7 @@ object GraftSql {
     * not commute with partial merges).
     */
   private def createMatView(spark: SparkSession, ifNotExists: Boolean,
-      name: String, middle: String, body0: String): DataFrame = {
+      name: String, middle: Frag, body0: String): DataFrame = {
     import spark.implicits._
     // the body is ClickHouse dialect like any other SELECT: translate
     // first (toDate/toYYYYMM/… in keys, WHERE predicates, sum args) so
@@ -1494,17 +1486,18 @@ object GraftSql {
     // collapse registration); the MV object itself is a plain VIEW
     // over the target. No ENGINE/ORDER BY (the target's DDL owns
     // them), and no POPULATE (ClickHouse refuses it on TO too).
-    val toTarget: Option[String] = middle.trim match {
-      case MvToRe(t) => Some(t)
-      case m if m.toUpperCase(java.util.Locale.ROOT).startsWith("TO ") ||
-          m.toUpperCase(java.util.Locale.ROOT).startsWith("TO\t") =>
+    val toTarget: Option[String] = middle match {
+      case MvTo(t) => Some(t.name)
+      case m if m.up(0) == "TO" =>
         throw new IllegalArgumentException(
           "CREATE MATERIALIZED VIEW … TO <table> takes NOTHING between the " +
             "target name and AS — the target table's own DDL declares " +
-            s"engine/keys/POPULATE is refused: $m")
+            s"engine/keys/POPULATE is refused: ${m.text}")
       case _ => None
     }
-    val em0 = MvEngineRe.findFirstMatchIn(middle)
+    val em0 = middle.clauses(Seq("ENGINE"))._2.headOption.collect {
+      case (_, MvEngine(e, args, _, tail)) => (e.text, args, tail)
+    }
     require(toTarget.isDefined || em0.isDefined,
       "CREATE MATERIALIZED VIEW needs ENGINE = SummingMergeTree() or " +
         "AggregatingMergeTree() (the MV owns its partial-row table), or " +
@@ -1512,42 +1505,33 @@ object GraftSql {
     val engine = toTarget match {
       case Some(_) => "to"
       case None =>
-        val em = em0.get
-        val e = em.group(1).toLowerCase(java.util.Locale.ROOT)
+        val (em, args, _) = em0.get
+        val e = em.toLowerCase(java.util.Locale.ROOT)
         require(e == "summingmergetree" || e == "aggregatingmergetree",
-          s"unsupported materialized-view engine: ${em.group(1)} — " +
+          s"unsupported materialized-view engine: $em — " +
             "SummingMergeTree (sum/count outputs) and AggregatingMergeTree " +
             "(sum/count/min/max/avg outputs, each collapsing under its own " +
             "function) route; insertion-order engines are not reproducible")
-        require(Option(em.group(2)).forall(_.trim.isEmpty),
-          s"${em.group(1)}(<args>) on a materialized view is redundant — the " +
+        require(!args.nonEmpty,
+          s"$em(<args>) on a materialized view is redundant — the " +
             "MV's aggregate outputs define the collapse; drop the argument list")
         e
     }
-    val populate = "(?is)\\bPOPULATE\\s*$".r.findFirstIn(middle).isDefined
+    val populate = middle.up(middle.size - 1) == "POPULATE"
     val orderKeys: Seq[String] = toTarget match {
       case Some(_) => Nil // the target's own DDL carries the keys
       case None =>
-        val tail = em0.get.after.toString
-          .replaceAll("(?is)\\bPOPULATE\\s*$", "")
-        val clauses = ddlClauses(tail)
-        clauses.get("ORDER BY").map { txt =>
-          val inner = if (txt.startsWith("(") && txt.endsWith(")"))
-            txt.substring(1, txt.length - 1) else txt
-          splitTopLevelCommas(inner)
-        }.getOrElse(throw new IllegalArgumentException(
+        val tail = em0.get._3
+        val clauses = ddlClauses(if (populate) tail.slice(0, tail.size - 1) else tail)
+        clauses.get("ORDER BY").map(_.unwrap.items).getOrElse(throw new IllegalArgumentException(
           "CREATE MATERIALIZED VIEW needs ORDER BY <keys> — the collapse key " +
             "FINAL sums under"))
     }
     // SELECT body: items / FROM <one table> [[INNER|LEFT] JOIN <dim>
     // ON <cond>] / [WHERE] / GROUP BY
-    val ms = topLevelMatches(body, MvClauseRe)
-    def clauseAt(kw: String): Option[(Int, Int)] =
-      ms.zipWithIndex.collectFirst {
-        case (m, i) if m.group(1).toUpperCase(java.util.Locale.ROOT)
-            .replaceAll("\\s+", " ") == kw =>
-          (m.end, ms.lift(i + 1).map(_.start).getOrElse(body.length))
-      }
+    val (sel, ms) = frag(body).clauses(
+      Seq("FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT", "JOIN", "UNION"))
+    def clauseAt(kw: String): Option[Frag] = ms.collectFirst { case (`kw`, f) => f }
     Seq("HAVING", "ORDER BY", "LIMIT", "UNION").foreach { kw =>
       require(clauseAt(kw).isEmpty,
         s"materialized-view bodies with $kw are not supported — they do " +
@@ -1555,17 +1539,18 @@ object GraftSql {
           "appends per-batch partials; aggregate the MV at read time " +
           "instead)")
     }
-    val fromSpan = clauseAt("FROM").getOrElse(throw new IllegalArgumentException(
+    val from = clauseAt("FROM").getOrElse(throw new IllegalArgumentException(
       "materialized-view body needs FROM <table>"))
-    val groupSpan = clauseAt("GROUP BY").getOrElse(
+    val groupBy = clauseAt("GROUP BY").getOrElse(
       throw new IllegalArgumentException(
         "materialized-view body needs GROUP BY <keys> — SummingMergeTree " +
           "partials are per-key aggregates"))
-    val whereSpan = clauseAt("WHERE")
-    val selEnd = ms.head.start
-    val items = splitTopLevelCommas(
-      body.substring(0, selEnd).trim.replaceFirst("(?is)^SELECT\\s+", ""))
-    val fromTxt = body.substring(fromSpan._1, fromSpan._2).trim
+    val items = (if (sel.up(0) == "SELECT") sel.drop(1) else sel).items
+    val (src, fromRest) = from match {
+      case MvFrom(s, rest) => (s.name, rest)
+      case _ => throw new IllegalArgumentException(
+        s"materialized-view source must be a single named table, got: ${from.text}")
+    }
     // the broadcast-dim join (r14 verdict next-item 5): `FROM src
     // [INNER|LEFT] JOIN dim ON cond` — row-local per insert batch (the
     // batch joins the CURRENT dim content at insert time, ClickHouse's
@@ -1573,18 +1558,18 @@ object GraftSql {
     // machinery; the dim side broadcasts (dimension-table contract).
     // ON columns are qualified by the tables' SIMPLE names. RIGHT/FULL
     // (which would trigger on dim rows) and join chains refuse.
-    require(ms.count(_.group(1).equalsIgnoreCase("JOIN")) <= 1,
+    require(ms.count(_._1 == "JOIN") <= 1,
       "materialized-view bodies support at most ONE broadcast-dim JOIN — " +
         "pre-join the dimensions into one relation")
     val joinSpec: Option[(String, String, String)] =
-      clauseAt("JOIN").map { case (js, je) =>
-        val joinTxt = body.substring(js, je).trim
-        val m = MvJoinRe.findFirstMatchIn(joinTxt).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot parse materialized-view join '$joinTxt' — expected " +
-              "JOIN <dim table> ON <condition>"))
-        val kind = fromTxt.split("\\s+").drop(1).toSeq.map(
-          _.toUpperCase(java.util.Locale.ROOT)) match {
+      clauseAt("JOIN").map { j =>
+        val (dim, cond) = j match {
+          case MvJoin(d, c) => (d.name, c.text)
+          case _ => throw new IllegalArgumentException(
+            s"cannot parse materialized-view join '${j.text}' — expected " +
+              "JOIN <dim table> ON <condition>")
+        }
+        val kind = (0 until fromRest.size).map(fromRest.up) match {
           case Seq() | Seq("INNER") => "inner"
           case Seq("LEFT") => "left"
           case other => throw new IllegalArgumentException(
@@ -1592,11 +1577,8 @@ object GraftSql {
               s"${other.mkString(" ")} JOIN would trigger on DIMENSION " +
               "rows, which is not an insert-block trigger over the source")
         }
-        (kind, m.group(1), m.group(2).trim)
+        (kind, dim, cond)
       }
-    val src = fromTxt.split("\\s+")(0)
-    require(src.matches("[\\w.]+"),
-      s"materialized-view source must be a single named table, got: $src")
     joinSpec.foreach { case (_, dim, cond) =>
       require(scala.util.Try(spark.table(dim)).isSuccess,
         s"materialized-view join table '$dim' is not resolvable in the " +
@@ -1605,16 +1587,11 @@ object GraftSql {
         "materialized-view join definitions may not contain '|' or ';' " +
           "(the session-conf encoding reserves them)")
     }
-    val where = whereSpan.fold("")(s => body.substring(s._1, s._2).trim)
+    val where = clauseAt("WHERE").fold("")(_.text)
     require(!where.contains("|") && items.forall(i => !i.contains("|") && !i.contains(";")),
       "materialized-view definitions may not contain '|' or ';' " +
         "(the session-conf encoding reserves them)")
-    val groupCols = {
-      val g = body.substring(groupSpan._1, groupSpan._2).trim
-      val inner = if (g.startsWith("(") && g.endsWith(")"))
-        g.substring(1, g.length - 1) else g
-      splitTopLevelCommas(inner)
-    }
+    val groupCols = groupBy.unwrap.items
     val keyItems = scala.collection.mutable.ArrayBuffer.empty[String]
     val aggItems = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
     // avg outputs: (out, sum helper col, count helper col) — stored as
@@ -1955,51 +1932,59 @@ object GraftSql {
       .toDF("command", "table", "days_rewritten", "days_dropped", "rows_affected")
   }
 
+  /** RENAME TABLE: Spark's own ALTER TABLE … RENAME TO, then every graft
+    * registration of the table re-homes to its new name.
+    */
+  private def renameTable(spark: SparkSession, from: String, to: String): DataFrame = {
+    spark.sql(s"ALTER TABLE $from RENAME TO $to")
+    val (fromSimple, toSimple) = (from.split('.').last, to.split('.').last)
+    // graft.ddl re-homes by key AND rewrites the statement's own
+    // table name below
+    Seq("final", "sample", "sumfinal", "aggfinal", "collapsefinal",
+      "orderby", "partition", "snapshot", "mv", "ddl", "ttl").foreach { kind =>
+        val (f, t) = (s"graft.$kind.$fromSimple", s"graft.$kind.$toSimple")
+        spark.conf.getOption(f).foreach { v =>
+          spark.conf.set(t, v); spark.conf.unset(f)
+        }
+      }
+    // registrations that NAME the renamed table inside their value
+    // re-home too: a dictionary's encoded source (src|key|defaults)
+    // and a materialized view's (mv|src|…) segments — otherwise a
+    // later dictGet / INSERT would read the old name (an error, or
+    // silently a DIFFERENT relation if that name is reused)
+    // the stored SHOW CREATE statement names the table inside its
+    // value — rewrite the head so the returned DDL matches the
+    // table's new name
+    spark.conf.getOption(s"graft.ddl.$toSimple").foreach { v =>
+      spark.conf.set(s"graft.ddl.$toSimple",
+        v.replaceFirst("(?is)^CREATE\\s+TABLE\\s+[\\w.]+", s"CREATE TABLE $to"))
+    }
+    def rehome(seg: String): String =
+      if (seg == from) to else if (seg == fromSimple) toSimple else seg
+    spark.conf.getAll.foreach {
+      case (k, v) if k.startsWith("graft.dict.") =>
+        val parts = v.split("\\|", 3)
+        if (rehome(parts(0)) != parts(0))
+          spark.conf.set(k, (rehome(parts(0)) +: parts.tail.toSeq).mkString("|"))
+      case (k, v) if k.startsWith("graft.mv.") =>
+        val parts = v.split("\\|", 7)
+        // the broadcast-dim join segment names a table too — its
+        // dim re-homes with the rename like the mv/src segments
+        val moved = (Seq(rehome(parts(0)), rehome(parts(1))) ++
+          parts.drop(2).toSeq).zipWithIndex.map {
+            case (seg, i) if i == 5 && seg.nonEmpty =>
+              val j = seg.split(";", 3)
+              (Seq(j(0), rehome(j(1))) ++ j.drop(2).toSeq).mkString(";")
+            case (seg, _) => seg
+          }
+        if (moved != parts.toSeq) spark.conf.set(k, moved.mkString("|"))
+      case _ => ()
+    }
+    okRow(spark, s"RENAME TABLE TO $to", from)
+  }
+
   private def okRow(spark: SparkSession, cmd: String, table: String): DataFrame = {
     import spark.implicits._
     Seq((cmd, table, true)).toDF("command", "table", "ok")
-  }
-
-  // ── tiny top-level scanners (outside '…' strings and parens) ──────
-
-  /** Index of the LAST top-level occurrence of a keyword. */
-  private def lastTopLevelKeyword(s: String, kw: String): Int = {
-    var depth = 0; var inStr = false; var i = 0; var last = -1
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && i + kw.length <= s.length &&
-              s.regionMatches(true, i, kw, 0, kw.length) &&
-              (i == 0 || s.charAt(i - 1).isWhitespace) &&
-              (i + kw.length == s.length || s.charAt(i + kw.length).isWhitespace))
-            last = i
-      }
-      i += 1
-    }
-    last
-  }
-
-  private def splitTopLevelCommas(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 }

@@ -349,9 +349,7 @@ object Snapshot {
       AtomicDir.withLease(dest) {
     // NULL-predicate rows survive: DELETE removes rows where the
     // predicate is TRUE — `!pred` alone would filter NULLs out too
-    val r = mutate(spark, dest, predicate, day => day.filter(!coalesce(predicate, lit(false))))
-    logMutation(spark, dest, "DELETE", predicateSql(predicate), r)
-    r
+    mutate(spark, dest, "DELETE", predicate, day => day.filter(!coalesce(predicate, lit(false))))
   }
 
   /** `ALTER TABLE … UPDATE col = expr WHERE predicate`: rows matching
@@ -362,7 +360,8 @@ object Snapshot {
     */
   def update(spark: SparkSession, dest: String, predicate: Column,
       assignments: Map[String, Column]): MutationReport = AtomicDir.withLease(dest) {
-    val r = mutate(spark, dest, predicate, { day =>
+    val cmd = assignments.keys.toSeq.sorted.mkString("UPDATE ", ", ", "")
+    mutate(spark, dest, cmd, predicate, { day =>
       val bad = assignments.keySet -- day.columns.toSet
       require(bad.isEmpty, s"update assigns to unknown column(s): ${bad.mkString(", ")}")
       // the rewrite is written partitioned by day: an assigned
@@ -378,9 +377,6 @@ object Snapshot {
         }
       }: _*)
     })
-    val cmd = assignments.keys.toSeq.sorted.mkString("UPDATE ", ", ", "")
-    logMutation(spark, dest, cmd, predicateSql(predicate), r)
-    r
   }
 
   /** `OPTIMIZE TABLE … FINAL DEDUPLICATE` — drop fully identical rows
@@ -393,19 +389,16 @@ object Snapshot {
     */
   def deduplicate(spark: SparkSession, dest: String): MutationReport = AtomicDir.withLease(dest) {
     val manifest = requireManifest(spark, dest)
+    val log = mutationLog(spark, dest, "OPTIMIZE DEDUPLICATE", "")
     val resolved = resolve(spark, dest, Some(manifest))
     val dataCols = resolved.columns.filterNot(_ == "bucket_day").sorted
     val perDay = resolved.groupBy("bucket_day").agg(
       count(lit(1)).as("n"),
       countDistinct(struct(dataCols.map(col): _*)).as("nd")).collect()
     val dup = perDay.filter(r => r.getLong(1) > r.getLong(2))
-    val report =
-      if (dup.isEmpty) MutationReport(Nil, Nil, 0L)
-      else rewriteDayPartitions(spark, dest, manifest, resolved,
-        dup.map(_.getString(0)).sorted.toSeq, _.dropDuplicates(),
-        dup.map(r => r.getLong(1) - r.getLong(2)).sum)
-    logMutation(spark, dest, "OPTIMIZE DEDUPLICATE", "", report)
-    report
+    rewriteDayPartitions(spark, dest, manifest, resolved,
+      dup.map(_.getString(0)).sorted.toSeq, _.dropDuplicates(),
+      dup.map(r => r.getLong(1) - r.getLong(2)).sum, log)
   }
 
   /** Hidden `system.mutations` sidecar: the ordered audit log of every
@@ -413,7 +406,7 @@ object Snapshot {
     */
   private val MutationsDir = "_graft_mutations"
 
-  /** The mutation log's fixed schema (its only writer is [[logMutation]]). */
+  /** The mutation log's fixed schema (its only writer is [[mutationLog]]). */
   private val MutationsSchema = StructType.fromDDL("mutation_id BIGINT, " +
     "event_time_ms BIGINT, command STRING, predicate STRING, days_rewritten BIGINT, " +
     "days_dropped BIGINT, rows_affected BIGINT, is_done BOOLEAN")
@@ -426,25 +419,29 @@ object Snapshot {
   /** `system.mutations` analog: one row per mutation command ever run
     * — ordinal, wall-clock time, command, predicate, day/row impact,
     * completion flag (always true: mutations here are synchronous,
-    * where ClickHouse's are queued). Pure metadata, AtomicDir-swapped
-    * like the manifest; model-scale by construction.
+    * where ClickHouse's are queued). Pure metadata, committed with the
+    * mutation it logs; model-scale by construction.
     */
   def mutations(spark: SparkSession, dest: String): DataFrame =
     readSidecar(spark, dest, MutationsDir, Some(MutationsSchema)).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema))
 
-  private def logMutation(spark: SparkSession, dest: String, command: String,
-      predicate: String, r: MutationReport): Unit = {
+  /** The log with one more row for a mutation's report. The prior rows
+    * are read now, before the mutation stages anything (the lease
+    * holder's sidecar read discards uncommitted staging); the new log
+    * commits with the mutation ([[commitTxn]]).
+    */
+  private def mutationLog(spark: SparkSession, dest: String, command: String,
+      predicate: String): MutationReport => DataFrame = {
     import spark.implicits._
     val prior = mutations(spark, dest).collect().map(x =>
       (x.getLong(0), x.getLong(1), x.getString(2), x.getString(3),
         x.getLong(4), x.getLong(5), x.getLong(6), x.getBoolean(7))).toSeq
     val nextId = prior.map(_._1).maxOption.getOrElse(0L) + 1
-    val row = (nextId, System.currentTimeMillis(), command, predicate,
+    r => (prior :+ (nextId, System.currentTimeMillis(), command, predicate,
       r.daysRewritten.length.toLong, r.daysDropped.length.toLong,
-      r.rowsAffected, true)
-    writeSidecar(dest, MutationsDir, (prior :+ row).toDF("mutation_id", "event_time_ms",
-      "command", "predicate", "days_rewritten", "days_dropped", "rows_affected", "is_done"))
+      r.rowsAffected, true)).toDF("mutation_id", "event_time_ms",
+      "command", "predicate", "days_rewritten", "days_dropped", "rows_affected", "is_done")
   }
 
   private[graft] def requireManifest(spark: SparkSession, dest: String): Manifest =
@@ -461,16 +458,16 @@ object Snapshot {
       spark: SparkSession, dest: String): Seq[(String, Long, String)] =
     requireManifest(spark, dest)._2.map(r => (r._1, r._3, r._4))
 
-  private def mutate(spark: SparkSession, dest: String, predicate: Column,
+  private def mutate(spark: SparkSession, dest: String, command: String, predicate: Column,
       rewriteDay: DataFrame => DataFrame): MutationReport = {
     val manifest = requireManifest(spark, dest)
+    val log = mutationLog(spark, dest, command, predicateSql(predicate))
     val resolved = resolve(spark, dest, Some(manifest))
     // one pass over the resolved view: which days contain matches, and
     // how many rows (metadata-scale collect — one row per affected day)
     val hits = digestScan(resolved.filter(predicate))
-    if (hits.isEmpty) return MutationReport(Nil, Nil, 0L)
     rewriteDayPartitions(spark, dest, manifest, resolved,
-      hits.map(_._1).sorted, rewriteDay, hits.map(_._2).sum)
+      hits.map(_._1).sorted, rewriteDay, hits.map(_._2).sum, log)
   }
 
   /** Shared day-granular rewrite core of [[delete]]/[[update]]/
@@ -480,14 +477,19 @@ object Snapshot {
     * The refuse-to-empty guard runs, the staged days are digested (a
     * write-then-verify read-back, like backup()'s), and only then does
     * one [[commitTxn]] swap the rewritten days in, drop the emptied
-    * ones and rewrite the manifest. The Spark job count is fixed, not
-    * one write (plus one emptiness probe) per day. `resolved` is the
-    * caller's resolve over `manifest` (one resolve per mutation).
+    * ones and rewrite the manifest and the mutation `log`. The Spark job
+    * count is fixed, not one write (plus one emptiness probe) per day.
+    * `resolved` is the caller's resolve over `manifest` (one resolve per
+    * mutation). With no day affected, only the log commits.
     */
   private def rewriteDayPartitions(spark: SparkSession, dest: String,
       manifest: Manifest, resolved: DataFrame,
       affected: Seq[String], rewriteDay: DataFrame => DataFrame,
-      rowsAffected: Long): MutationReport = {
+      rowsAffected: Long, log: MutationReport => DataFrame): MutationReport = {
+    if (affected.isEmpty) {
+      commitTxn(spark, dest, Nil, Nil, Some(log(MutationReport(Nil, Nil, 0L))))
+      return MutationReport(Nil, Nil, 0L)
+    }
     val (base, manifestRows) = manifest
     val data = s"$dest/$TxnDir/data"
     val out = rewriteDay(resolved.filter(col("bucket_day").isin(affected: _*)))
@@ -515,11 +517,12 @@ object Snapshot {
         case None => Some((day, n, x, s, source))
       }
     }
+    val report = MutationReport(rewrittenDays, droppedDays, rowsAffected)
     commitTxn(spark, dest,
       rewrittenDays.map(d => (Some(stagedDay(dest, d)), dayDir(dest, d))) ++
         droppedDays.map(d => (None, dayDir(dest, d))),
-      Seq(dest -> ((base, newRows))))
-    MutationReport(rewrittenDays, droppedDays, rowsAffected)
+      Seq(dest -> ((base, newRows))), Some(log(report)))
+    report
   }
 
   /** `system.parts` analog: the snapshot's part inventory as a
@@ -846,22 +849,27 @@ object Snapshot {
 
   /** THE snapshot commit of every day-level verb. The caller has
     * staged each new day under `_graft_txn/` and checked its digests;
-    * this stages each snapshot's new manifest beside them and commits
-    * `days` — (staged, live) pairs, `None` retiring a live day — and
-    * the manifests as ONE [[AtomicDir.commit]], so a crash leaves every
-    * snapshot wholly before or after the verb ([[recoverTxn]]). Another
+    * this stages each snapshot's new manifest, and `dest`'s new mutation
+    * log if any, beside them and commits `days` — (staged, live) pairs,
+    * `None` retiring a live day — the manifests and the log as ONE
+    * [[AtomicDir.commit]], so a crash leaves every snapshot wholly
+    * before or after the verb ([[recoverTxn]]). Another
     * snapshot (MOVE's source) gets a link to this commit, so its reads
     * recover it too; the commit itself retires the link. Runs under
     * every snapshot's lease, after the verb's last sidecar read (the
     * holder's recovery discards uncommitted staging).
     */
   private def commitTxn(spark: SparkSession, dest: String,
-      days: Seq[(Option[String], String)], manifests: Seq[(String, Manifest)]): Unit = {
+      days: Seq[(Option[String], String)], manifests: Seq[(String, Manifest)],
+      log: Option[DataFrame] = None): Unit = {
     val txn = s"$dest/$TxnDir"
     val fs = AtomicDir.fileSystem(txn)
     val staged = manifests.zipWithIndex.map { case ((snap, m), i) =>
       manifestDf(spark, m).write.parquet(s"$txn/manifest$i")
       (Some(s"$txn/manifest$i"), s"$snap/$ManifestDir")
+    } ++ log.map { df =>
+      df.coalesce(1).write.parquet(s"$txn/mutations")
+      (Some(s"$txn/mutations"), s"$dest/$MutationsDir")
     }
     val others = manifests.map(_._1).filter(_ != dest)
     others.foreach { snap =>

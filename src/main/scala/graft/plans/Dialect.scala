@@ -274,23 +274,34 @@ object Dialect {
 
   // ── lexer ──────────────────────────────────────────────────────────
 
-  private[plans] sealed trait Tok { def text: String }
-  private[plans] final case class Word(text: String) extends Tok {
+  private[graft] sealed trait Tok { def text: String }
+  private[graft] final case class Word(text: String) extends Tok {
     val up: String = text.toUpperCase
   }
-  private[plans] final case class Str(text: String) extends Tok // quotes kept
-  private[plans] final case class Num(text: String) extends Tok
-  private[plans] final case class Punct(text: String) extends Tok
-  private[plans] final case class Quoted(text: String) extends Tok // `x` / "x"
-  private[plans] final case class Raw(text: String) extends Tok // pre-emitted
+  private[graft] final case class Str(text: String) extends Tok // quotes kept
+  private[graft] final case class Num(text: String) extends Tok
+  private[graft] final case class Punct(text: String) extends Tok
+  private[graft] final case class Quoted(text: String) extends Tok // `x` / "x"
+  private[graft] final case class Raw(text: String) extends Tok // pre-emitted
+
+  /** A token and its start offset in the lexed text. */
+  private[graft] final case class Lexeme(tok: Tok, at: Int) { def end: Int = at + tok.text.length }
 
   private val MultiPunct = Seq("<=", ">=", "<>", "!=", "->", "||", "::", "==")
 
-  private[plans] def lex(sql: String): Vector[Tok] = {
-    val out = ArrayBuffer.empty[Tok]
+  private[plans] def lex(sql: String): Vector[Tok] = lexAt(sql).map(_.tok)
+
+  /** [[lex]] with offsets. `stop` sees the tokens so far after each one;
+    * once it holds, the rest of `sql` is left unlexed.
+    */
+  private[graft] def lexAt(sql: String,
+      stop: collection.Seq[Lexeme] => Boolean = _ => false): Vector[Lexeme] = {
+    val out = ArrayBuffer.empty[Lexeme]
+    var stopped = false
+    def emit(t: Tok, at: Int): Unit = { out += Lexeme(t, at); stopped = stop(out) }
     var i = 0
     val n = sql.length
-    while (i < n) {
+    while (i < n && !stopped) {
       val c = sql(i)
       if (c.isWhitespace) i += 1
       else if (c == '-' && i + 1 < n && sql(i + 1) == '-') {
@@ -303,7 +314,7 @@ object Dialect {
         i += 2; while (i + 1 < n && !(sql(i) == '*' && sql(i + 1) == '/')) i += 1
         i = math.min(n, i + 2)
         if (start + 2 < n && sql(start + 2) == '+')
-          out += Raw(sql.substring(start, i))
+          emit(Raw(sql.substring(start, i)), start)
       } else if (c == '\'') {
         val start = i; i += 1
         var done = false
@@ -314,30 +325,30 @@ object Dialect {
           else i += 1
         }
         if (!done) fail(s"unterminated string literal at offset $start")
-        out += Str(sql.substring(start, i))
+        emit(Str(sql.substring(start, i)), start)
       } else if (c == '`' || c == '"') {
         val start = i; i += 1
         while (i < n && sql(i) != c) i += 1
         if (i >= n) fail(s"unterminated quoted identifier at offset $start")
         i += 1
-        out += Quoted(sql.substring(start, i))
+        emit(Quoted(sql.substring(start, i)), start)
       } else if (c.isDigit ||
           (c == '.' && i + 1 < n && sql(i + 1).isDigit &&
-            !out.lastOption.exists(t => t.isInstanceOf[Word] || t.isInstanceOf[Num]
+            !out.lastOption.map(_.tok).exists(t => t.isInstanceOf[Word] || t.isInstanceOf[Num]
               || t.isInstanceOf[Quoted] || t == Punct(")")))) {
         val start = i
         while (i < n && (sql(i).isLetterOrDigit || sql(i) == '.' ||
             ((sql(i) == '+' || sql(i) == '-') && (sql(i - 1) == 'e' || sql(i - 1) == 'E'))))
           i += 1
-        out += Num(sql.substring(start, i))
+        emit(Num(sql.substring(start, i)), start)
       } else if (c.isLetter || c == '_') {
         val start = i
         while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
-        out += Word(sql.substring(start, i))
+        emit(Word(sql.substring(start, i)), start)
       } else {
         val two = if (i + 1 < n) sql.substring(i, i + 2) else ""
-        if (MultiPunct.contains(two)) { out += Punct(two); i += 2 }
-        else { out += Punct(c.toString); i += 1 }
+        if (MultiPunct.contains(two)) { emit(Punct(two), i); i += 2 }
+        else { emit(Punct(c.toString), i); i += 1 }
       }
     }
     out.toVector

@@ -255,6 +255,9 @@ class ContentionSpec extends SparkSpec {
       val inBody = new java.util.concurrent.atomic.AtomicInteger(0)
       val maxInBody = new java.util.concurrent.atomic.AtomicInteger(0)
       val entered = new java.util.concurrent.atomic.AtomicInteger(0)
+      // every failure other than a held lease: a contender that lost the
+      // create race to a breaker must retry, not die
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val threads = (0 until 8).map { _ =>
         new Thread(() => {
           try AtomicDir.withLease(dest) {
@@ -263,10 +266,14 @@ class ContentionSpec extends SparkSpec {
             entered.incrementAndGet()
             Thread.sleep(5)
             inBody.decrementAndGet()
-          } catch { case _: AtomicDir.LeaseHeldException => () }
+          } catch {
+            case _: AtomicDir.LeaseHeldException => ()
+            case e: Throwable => errors.add(e)
+          }
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errors.isEmpty, s"contenders failed: ${errors.toArray.mkString("; ")}")
       assert(entered.get() >= 1, "at least one contender must break the stale lock and enter")
       assert(maxInBody.get() == 1,
         s"two holders were live at once (max=${maxInBody.get()}) — the break was not atomic")

@@ -146,33 +146,34 @@ object TornRenameFs {
   @volatile var inject: Option[Inject] = None
 
   /** The global crash budget over every create, every per-file delete
-    * and every per-file copy inside a rename: `armAtCommit(k)` arms it
-    * at the next commit-marker create (a name ending in `commit`,
-    * counted as op 1), so Spark's own `_temporary` writes before the
-    * commit are never counted, and the k-th op from there throws
-    * [[TornCrash]] — as does every op after it, since a dead process
-    * does nothing more, until [[disarm]]. The budget stops counting at
-    * the commit's end: once the marker is deleted, when a snapshot
-    * commit's staging directory (`_graft_txn`) has been deleted too.
-    * Lease files are never counted: a dead holder's lease waiting out
-    * its TTL is [[ContentionSpec]]'s subject.
+    * and every per-file copy inside a rename: `armAtCommit(k)` arms it,
+    * and it counts only inside commits — from a commit-marker create (a
+    * name ending in `commit`, counted as one op) to the commit's end —
+    * so Spark's own `_temporary` writes between commits are never
+    * counted, and every commit of a verb (OPTIMIZE FINAL's per-day
+    * ones too) is swept. The k-th counted op throws [[TornCrash]] — as
+    * does every op after it, since a dead process does nothing more,
+    * until [[disarm]]. A commit ends once its marker is deleted, and
+    * for a snapshot commit once its staging directory (`_graft_txn`)
+    * has been deleted too. Lease files are never counted: a dead
+    * holder's lease waiting out its TTL is [[ContentionSpec]]'s subject.
     */
-  private var armAt: Option[Int] = None
   private var left: Option[Int] = None
+  private var counting = false
   private var markerGone = false
   @volatile private var dead = false
   private val copying = new ThreadLocal[Boolean] { override def initialValue() = false }
 
   def armAtCommit(k: Int): Unit = synchronized {
-    armAt = Some(k); left = None; dead = false; markerGone = false
+    left = Some(k); counting = false; dead = false; markerGone = false
   }
 
-  def disarm(): Unit = synchronized { armAt = None; left = None; dead = false }
+  def disarm(): Unit = synchronized { left = None; counting = false; dead = false }
 
   /** Whether a budget or a `crashAfter` injection has fired. */
   def crashed: Boolean = dead
 
-  private def crashNow(): Unit = synchronized { left = Some(0) }
+  private def crashNow(): Unit = synchronized { left = Some(0); counting = true }
 
   private def uncounted[A](body: => A): A = {
     copying.set(true)
@@ -183,11 +184,11 @@ object TornRenameFs {
       deleting: Boolean = false): Unit = synchronized {
     val name = p.getName
     if (copying.get || name.contains(".lock")) return
-    if (creating && left.isEmpty && armAt.isDefined && name.endsWith("commit")) {
-      left = armAt
-      armAt = None
+    if (creating && left.isDefined && name.endsWith("commit")) {
+      counting = true
+      markerGone = false
     }
-    left.foreach { n =>
+    if (counting) left.foreach { n =>
       if (n <= 1) {
         left = Some(0)
         dead = true
@@ -196,13 +197,13 @@ object TornRenameFs {
       left = Some(n - 1)
       if (deleting && name.endsWith("commit")) {
         markerGone = true
-        if (p.getParent.getName != "_graft_txn") left = None
+        if (p.getParent.getName != "_graft_txn") counting = false
       }
     }
   }
 
   /** A recursive delete of `p` finished: the snapshot commit's end. */
   private def deleted(p: org.apache.hadoop.fs.Path): Unit = synchronized {
-    if (markerGone && p.getName == "_graft_txn") left = None
+    if (markerGone && p.getName == "_graft_txn") counting = false
   }
 }

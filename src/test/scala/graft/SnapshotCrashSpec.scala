@@ -16,10 +16,10 @@ import java.util.concurrent.CountDownLatch
   * marker on, and after each crash runs recover (a read) and the next
   * statement (a no-op gc, a writer). Each snapshot must then equal its
   * state before the verb or after it — by manifest rows, by read-back
-  * digests and by the file layout of its live and detached days — and
-  * hold no staging. OPTIMIZE FINAL commits one day at a time, so there
-  * each day's layout is its before or its after layout (its first
-  * day's commit is the one swept).
+  * digests, by the file layout of its live and detached days and by its
+  * mutation log — and hold no staging. OPTIMIZE FINAL commits one day
+  * at a time, and every one of those commits is swept, so there each
+  * day's layout is its before or its after layout.
   */
 class SnapshotCrashSpec extends SparkSpec {
 
@@ -80,10 +80,10 @@ class SnapshotCrashSpec extends SparkSpec {
     }
   }
 
-  /** Manifest rows, read-back digests, and data files per live and
-    * detached day.
+  /** Manifest rows, read-back digests, data files per live and
+    * detached day, and the mutation log without its wall-clock times.
     */
-  private type State = (Any, Set[Any], Map[String, Int])
+  private type State = (Any, Set[Any], Map[String, Int], Seq[Any])
 
   private def state(dest: String): State = {
     val manifest = Snapshot.requireManifest(spark, dest)
@@ -96,7 +96,9 @@ class SnapshotCrashSpec extends SparkSpec {
       .map(d => s"${d.getParentFile.getName}/${d.getName}" ->
         d.listFiles.count(_.getName.startsWith("part-")))
       .toMap
-    ((manifest._1, manifest._2.sortBy(_._1)), readBack, layout)
+    val log = Snapshot.mutations(spark, dest).drop("event_time_ms")
+      .orderBy("mutation_id").collect().map(_.toSeq).toSeq
+    ((manifest._1, manifest._2.sortBy(_._1)), readBack, layout, log)
   }
 
   private def noStaging(dest: String): Boolean =
@@ -107,7 +109,8 @@ class SnapshotCrashSpec extends SparkSpec {
     */
   /** Content as `before`, and each day's file layout from `before` or `after`. */
   private def dayByDay(got: State, before: State, after: State): Boolean =
-    got._1 == before._1 && got._2 == before._2 && got._3.keySet == before._3.keySet &&
+    got._1 == before._1 && got._2 == before._2 && got._4 == before._4 &&
+      got._3.keySet == before._3.keySet &&
       got._3.forall { case (d, n) => before._3(d) == n || after._3(d) == n }
 
   private def sweep(snapshots: Seq[String], perDay: Boolean = false)(
@@ -173,10 +176,13 @@ class SnapshotCrashSpec extends SparkSpec {
 
   test("window 1: a DELETE crashed between two day swaps lands wholly before or after") {
     val Seq(dest) = fresh(Seq("full"))
+    val Seq(before) = fresh(Seq("full"))
     val Seq(after) = fresh(Seq("full"))
     val pred = col("event_type") === "click" && (dayPred(0) || dayPred(1))
+    val noop = col("event_type") === "no_such"
     Snapshot.delete(spark, after, pred)
-    val want = Seq(state(dest), state(after))
+    // the recovering no-op DELETE below logs a row of its own
+    val want = Seq(before, after).map { d => Snapshot.delete(spark, d, noop); state(d) }
     // the first op on the second live day dies at once: the first day
     // is already swapped
     TornRenameFs.inject = Some(TornRenameFs.Inject(s"bucket_day=${days(1)}",
@@ -184,7 +190,7 @@ class SnapshotCrashSpec extends SparkSpec {
     try intercept[Exception](Snapshot.delete(spark, dest, pred))
     finally TornRenameFs.inject = None
     // the next mutation runs every recovery there is
-    Snapshot.delete(spark, dest, col("event_type") === "no_such")
+    Snapshot.delete(spark, dest, noop)
     assert(want.contains(state(dest)), "a half-applied DELETE must not survive recovery")
   }
 
@@ -202,6 +208,22 @@ class SnapshotCrashSpec extends SparkSpec {
     // and the day can be brought back
     if (state(dest) == want(1)) Snapshot.attachPartition(spark, dest, days(1))
     assert(state(dest) == want(0))
+  }
+
+  test("window 3: a DELETE crashed between its day commit and its mutation log lands wholly " +
+      "before or after") {
+    val Seq(dest) = fresh(Seq("full"))
+    val Seq(after) = fresh(Seq("full"))
+    Snapshot.delete(spark, after, dayPred(0))
+    val want = Seq(state(dest), state(after))
+    // the first op after the commit deletes its staging dies: the days
+    // and the manifest are live
+    TornRenameFs.inject = Some(TornRenameFs.Inject(Snapshot.TxnDir, crashAfter = true))
+    try Snapshot.delete(spark, dest, dayPred(0))
+    catch { case _: Exception if TornRenameFs.crashed => () }
+    finally { TornRenameFs.inject = None; TornRenameFs.disarm() }
+    Snapshot.gc(spark, dest, keepDays = 10000)
+    assert(want.contains(state(dest)), "a committed DELETE must be in the mutation log")
   }
 
   test("a MOVE source's link left before the commit point ties no read to the destination") {
