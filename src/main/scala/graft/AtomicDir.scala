@@ -86,7 +86,7 @@ object AtomicDir {
     * and custom `fs.<scheme>.impl` registrations apply), or a plain
     * default when called outside any session.
     */
-  private def hadoopConf(): Configuration =
+  private[graft] def hadoopConf(): Configuration =
     SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())

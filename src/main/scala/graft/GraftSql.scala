@@ -691,7 +691,7 @@ object GraftSql {
       operators.Snapshot.resolve(spark, tdir, Some(manifest)).createOrReplaceTempView(t)
       if (!dest.endsWith(".zip")) spark.conf.set(s"graft.snapshot.$db.$t", tdir)
       // row count from the manifest just read, summed on the driver
-      (t, manifest._2.map(_._2).sum)
+      (t, manifest.rows.map(_._2).sum)
     }
     rows.toDF("table", "n_rows")
   }

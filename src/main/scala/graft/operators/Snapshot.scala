@@ -2,9 +2,19 @@ package graft.operators
 
 import graft.AtomicDir
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, BOOLEAN, INT64}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** The backup/restore loop itself (layer [R]): `BACKUP DATABASE … TO
   * Disk` (backup.sh:45) with the post-write validation of
@@ -26,16 +36,20 @@ object Snapshot {
     */
   private[graft] val ManifestDir = "_graft_manifest"
 
-  /** The manifest's fixed schema (its only writer is [[manifestDf]]):
-    * reads pass it explicitly, so none starts a schema-inference job.
-    */
+  /** The manifest's fixed schema (its only writer is [[writeManifestFile]]). */
   private[graft] val ManifestSchema = StructType.fromDDL("bucket_day STRING, " +
     "n_rows BIGINT, content_xor BIGINT, content_sum STRING, source STRING, base_path STRING")
 
   /** A manifest as read: the base path if the snapshot is incremental,
-    * and one (day, n_rows, xor, sum, source) row per day partition.
+    * one (day, n_rows, xor, sum, source) row per day partition, and the
+    * schema the data is read with (data columns + `bucket_day`), None in
+    * a manifest written before the schema was recorded.
     */
-  private[graft] type Manifest = (Option[String], Seq[(String, Long, Long, String, String)])
+  private[graft] final case class Manifest(base: Option[String],
+      rows: Seq[(String, Long, Long, String, String)], schema: Option[StructType])
+
+  /** Key of the recorded data schema (JSON) in the manifest file's footer. */
+  private val DataSchemaKey = "graft.data_schema"
 
   /** Staging directory of a snapshot commit ([[commitTxn]]). Spark's
     * file index skips a `_` name only when it has no `=`
@@ -51,23 +65,108 @@ object Snapshot {
 
   private def stagedDay(dest: String, day: String) = s"$dest/$TxnDir/data/bucket_day=$day"
 
-  /** The `_`-named sidecar `name` of `dest` (after crash recovery of
-    * the snapshot and of the sidecar's own swap), read with `schema`
-    * when it is fixed; None when it has no part file.
-    * The read names the part files, not the sidecar's root: Spark flags
-    * a root whose last component starts with `_` as hidden and logs
-    * "All paths were ignored" on every read of it, though it reads the
-    * files; and a glob root logs a missing-metadata warning.
+  /** The part files of the `_`-named sidecar `name` of `dest`, after
+    * crash recovery of the snapshot and of the sidecar's own swap.
+    */
+  private def sidecarParts(dest: String, name: String): Seq[Path] = {
+    recoverTxn(dest)
+    AtomicDir.recover(s"$dest/$name")
+    Option(AtomicDir.fileSystem(dest).globStatus(new Path(s"$dest/$name/part-*")))
+      .toSeq.flatten.map(_.getPath).sortBy(_.toString)
+  }
+
+  /** Sidecar `name` of `dest` as a Spark relation, read with `schema`
+    * when it is fixed; None when it has no part file. For the sidecars
+    * Spark scans ([[SkipIndex]], [[SystemCatalog]]'s manifest totals);
+    * the snapshot's own metadata is read on the driver
+    * ([[readSidecarRows]]). The read names the part files, not the
+    * sidecar's root: Spark flags a root whose last component starts
+    * with `_` as hidden and logs "All paths were ignored" on every read
+    * of it, though it reads the files; and a glob root logs a
+    * missing-metadata warning.
     */
   private[graft] def readSidecar(spark: SparkSession, dest: String, name: String,
       schema: Option[StructType] = None): Option[DataFrame] = {
-    recoverTxn(dest)
-    AtomicDir.recover(s"$dest/$name")
-    val glob = new Path(s"$dest/$name/part-*")
-    val parts = Option(AtomicDir.fileSystem(dest).globStatus(glob))
-      .toSeq.flatten.map(_.getPath.toString).sorted
+    val parts = sidecarParts(dest, name).map(_.toString)
     if (parts.isEmpty) None
     else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(parts: _*))
+  }
+
+  /** Sidecar `name` of `dest` read on the driver with its fixed
+    * `schema`: its rows and its footer's key-value metadata; None when
+    * it has no part file. Snapshot metadata is one row per day or per
+    * command, so a Spark job per read would cost far more than the read.
+    */
+  private def readSidecarRows(dest: String, name: String,
+      schema: StructType): Option[(Seq[Row], Map[String, String])] = {
+    val parts = sidecarParts(dest, name).map(readParquet(_, schema))
+    if (parts.isEmpty) None else Some((parts.flatMap(_._1), parts.flatMap(_._2).toMap))
+  }
+
+  /** The one part file a driver-side sidecar write produces. */
+  private val PartFile = "part-00000.parquet"
+
+  /** Parquet form of a fixed sidecar schema: every column optional. */
+  private def parquetSchema(schema: StructType): MessageType =
+    new MessageType("spark_schema", schema.fields.toList.map[Type] { f =>
+      f.dataType match {
+        case StringType =>
+          Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case LongType => Types.optional(INT64).named(f.name)
+        case BooleanType => Types.optional(BOOLEAN).named(f.name)
+        case other => throw new IllegalArgumentException(s"no sidecar column type $other")
+      }
+    }.asJava)
+
+  /** Writes `rows` (typed as `schema`) as one parquet file at `file` on
+    * the driver, through the path's own Hadoop FileSystem, with `meta`
+    * as footer key-value metadata.
+    */
+  private def writeParquet(file: String, schema: StructType, rows: Seq[Row],
+      meta: Map[String, String]): Unit = {
+    val pq = parquetSchema(schema)
+    val groups = new SimpleGroupFactory(pq)
+    val conf = AtomicDir.hadoopConf()
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(file), conf))
+      .withConf(conf).withType(pq).withExtraMetaData(meta.asJava).build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+        r.get(i) match {
+          case v: String => g.append(schema(i).name, v)
+          case v: Long => g.append(schema(i).name, v)
+          case v: Boolean => g.append(schema(i).name, v)
+        }
+      }
+      out.write(g)
+    } finally out.close()
+  }
+
+  /** The rows of one parquet file read on the driver as `schema` (a
+    * column the file lacks reads as null), and its footer's key-value
+    * metadata. One open of the file.
+    */
+  private def readParquet(file: Path, schema: StructType): (Seq[Row], Map[String, String]) = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(file, AtomicDir.hadoopConf()))
+    try {
+      val meta = in.getFooter.getFileMetaData
+      val pq = meta.getSchema
+      val io = new ColumnIOFactory().getColumnIO(pq)
+      val groups = Iterator.continually(in.readNextRowGroup()).takeWhile(_ != null)
+        .flatMap { pages =>
+          val records = io.getRecordReader(pages, new GroupRecordConverter(pq))
+          Iterator.fill(pages.getRowCount.toInt)(records.read())
+        }.toList
+      val rows = groups.map(g => Row.fromSeq(schema.fields.toSeq.map { f =>
+        if (!pq.containsField(f.name) || g.getFieldRepetitionCount(f.name) == 0) null
+        else f.dataType match {
+          case StringType => g.getString(f.name, 0)
+          case LongType => g.getLong(f.name, 0)
+          case BooleanType => g.getBoolean(f.name, 0)
+        }
+      }))
+      (rows, meta.getKeyValueMetaData.asScala.toMap)
+    } finally in.close()
   }
 
   /** Per-day-partition content digest: row count + XOR and
@@ -77,10 +176,18 @@ object Snapshot {
     * the (count, xor, sum) triple disambiguates. Order-insensitive by
     * construction — parquet row order across writers never matters.
     * One row per day bucket: metadata-scale, whatever the data scale.
+    * Spark refuses to hash a map, so a column holding one is hashed as
+    * its JSON text (entry order is kept by a write and its read-back).
     */
   private[graft] def digest(bucketed: DataFrame): DataFrame = {
-    val dataCols = bucketed.columns.filterNot(_ == "bucket_day").sorted
-      .map(col(_))
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val dataCols = bucketed.schema.fields.filterNot(_.name == "bucket_day").sortBy(_.name)
+      .map(f => if (hasMap(f.dataType)) to_json(col(f.name)) else col(f.name))
     bucketed
       .select(col("bucket_day"), xxhash64(dataCols: _*).as("_rh"))
       .groupBy("bucket_day").agg(
@@ -94,7 +201,9 @@ object Snapshot {
     * 1): write day-partitioned, read back, verify row count matches.
     * The read-back pass also produces the per-partition digest manifest
     * that incremental backups diff against — validation and manifest
-    * cost one pass together. Returns the verified row count.
+    * cost one pass together. The manifest records the written schema,
+    * so every later read of the data skips schema inference. Returns
+    * the verified row count.
     */
   def backup(df: DataFrame, ts: Column, dest: String): Long = AtomicDir.withLease(dest) {
     // writer lease on the snapshot itself: two overlapping backups of
@@ -104,17 +213,18 @@ object Snapshot {
     // with LeaseHeldException. BackupLoop's whole-tick lease re-enters.
     val expected = df.count()
     Retention.writeSnapshot(df, ts, dest)
+    val schema = recordedSchema(df.withColumn("bucket_day", Retention.bucketDay(ts)))
     // an empty write leaves no readable footers — that IS the failure
     // mode the reference's [ -f FILE ] check catches (backup.sh:47–52)
     val dig =
-      try digestScan(restore(df.sparkSession, dest))
+      try digestScan(readData(df.sparkSession, dest, Some(schema)))
       catch { case _: org.apache.spark.sql.AnalysisException => Nil }
     val actual = dig.map(_._2).sum
     require(actual == expected,
       s"snapshot validation failed: wrote $expected rows, read back $actual (dest=$dest)")
     require(actual > 0, s"snapshot validation failed: empty snapshot at $dest")
-    writeSidecar(dest, ManifestDir,
-      manifestDf(df.sparkSession, (None, dig.map { case (d, n, x, s) => (d, n, x, s, "full") })))
+    writeManifest(dest,
+      Manifest(None, dig.map { case (d, n, x, s) => (d, n, x, s, "full") }, Some(schema)))
     actual
   }
 
@@ -151,9 +261,9 @@ object Snapshot {
   private[graft] def backupIncrementalReport(df: DataFrame, ts: Column, baseDir: String,
       dest: String): IncrementalReport = AtomicDir.withLease(dest) {
     val spark = df.sparkSession
-    val (_, baseRows) = readManifest(spark, baseDir).getOrElse(
+    val baseRows = readManifest(baseDir).getOrElse(
       throw new IllegalArgumentException(
-        s"base snapshot at $baseDir has no manifest — re-run Snapshot.backup on it"))
+        s"base snapshot at $baseDir has no manifest — re-run Snapshot.backup on it")).rows
     val baseDig = baseRows.map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val cur = df.withColumn("bucket_day", Retention.bucketDay(ts))
     val curDig = digestScan(cur).sortBy(_._1)
@@ -166,13 +276,14 @@ object Snapshot {
       // predicate the writer uses to re-scan only the changed days
       cur.filter(col("bucket_day").isin(changed: _*))
         .write.mode("overwrite").partitionBy("bucket_day").parquet(dest)
-    writeSidecar(dest, ManifestDir, manifestDf(spark, (Some(baseDir), curDig.map {
+    val manifest = Manifest(Some(baseDir), curDig.map {
       case (day, n, x, s) => (day, n, x, s, if (changed.contains(day)) "delta" else "base")
-    })))
+    }, Some(recordedSchema(cur)))
+    writeManifest(dest, manifest)
     // fail-fast validation, digest-deep like the reference's post-write
     // check: the RESOLVED view (delta ∪ pruned base) must reproduce the
     // current per-day digests exactly
-    val resolved = digestScan(resolve(spark, dest)).sortBy(_._1)
+    val resolved = digestScan(resolve(spark, dest, Some(manifest))).sortBy(_._1)
     require(resolved.sameElements(curDig),
       s"incremental snapshot validation failed: resolved view diverges from source (dest=$dest)")
     IncrementalReport(changed.length, curDig.length, curDig.map(_._2).sum)
@@ -191,23 +302,24 @@ object Snapshot {
     * serves both the broken-chain check and the recursion into the base.
     */
   def resolve(spark: SparkSession, dest: String): DataFrame =
-    resolve(spark, dest, readManifest(spark, dest))
+    resolve(spark, dest, readManifest(dest))
 
   /** [[resolve]] over a manifest the caller has already read. */
   private[graft] def resolve(spark: SparkSession, dest: String,
       manifest: Option[Manifest]): DataFrame =
     manifest match {
-      case None | Some((None, _)) => restore(spark, dest)
-      case Some((Some(base), rows)) =>
+      case None => readData(spark, dest, None)
+      case Some(Manifest(None, _, schema)) => readData(spark, dest, schema)
+      case Some(Manifest(Some(base), rows, schema)) =>
         val deltaDays = rows.collect { case (d, _, _, _, "delta") => d }
         val baseDays = rows.collect { case (d, _, _, _, "base") => d }
         // fail-fast on a broken chain (manifest-only, no data reads):
         // if the base was GC'd past days this delta still attributes to
         // it, a silent filter would return a "successful" restore
         // missing those days
-        val baseManifest = readManifest(spark, base)
-        baseManifest.foreach { case (_, baseRows) =>
-          val have = baseRows.map(_._1).toSet
+        val baseManifest = readManifest(base)
+        baseManifest.foreach { m =>
+          val have = m.rows.map(_._1).toSet
           val missing = baseDays.filterNot(have)
           require(missing.isEmpty,
             s"incremental chain broken: base $base no longer holds day(s) " +
@@ -217,7 +329,7 @@ object Snapshot {
         val fromBase = resolve(spark, base, baseManifest)
           .filter(col("bucket_day").isin(baseDays: _*))
         if (deltaDays.isEmpty) fromBase // nothing changed: no delta footers exist
-        else restore(spark, dest)
+        else readData(spark, dest, schema)
           .filter(col("bucket_day").isin(deltaDays: _*))
           .unionByName(fromBase)
     }
@@ -254,15 +366,15 @@ object Snapshot {
     * dependents').
     */
   def gc(spark: SparkSession, dest: String, keepDays: Int): GcReport = AtomicDir.withLease(dest) {
-    val (base, rows) = requireManifest(spark, dest)
+    val manifest = requireManifest(spark, dest)
     // one shared expiry rule with the directory GC (Retention.expireDays)
-    val (expiredDays, _) = Retention.expireDays(rows.map(_._1), keepDays)
+    val (expiredDays, _) = Retention.expireDays(manifest.rows.map(_._1), keepDays)
     val expiredSet = expiredDays.toSet
-    val (expired, kept) = rows.partition(r => expiredSet(r._1))
+    val (expired, kept) = manifest.rows.partition(r => expiredSet(r._1))
     if (expired.nonEmpty) {
-      commitTxn(spark, dest,
+      commitTxn(dest,
         expired.collect { case (day, _, _, _, src) if src != "base" => (None, dayDir(dest, day)) },
-        Seq(dest -> ((base, kept))))
+        Seq(dest -> manifest.copy(rows = kept)))
       // fail-fast consistency: the surviving local partition dirs must
       // be exactly the kept locally-sourced days (metadata-scale listing)
       val remaining = AtomicDir.fileSystem(dest).listStatus(new Path(dest)).map(_.getPath.getName)
@@ -293,7 +405,11 @@ object Snapshot {
     * leaves every partition either old or new, never half.
     */
   def compact(spark: SparkSession, dest: String): CompactReport = AtomicDir.withLease(dest) {
-    val want = readManifest(spark, dest).map(_._2.map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
+    val manifest = readManifest(dest)
+    val want = manifest.map(_.rows.map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
+    // a day directory holds the data columns only
+    val dataSchema = manifest.flatMap(_.schema)
+      .map(s => StructType(s.filterNot(_.name == "bucket_day")))
     val fs = AtomicDir.fileSystem(dest)
     val files = fs.listStatus(new Path(dest)).map(_.getPath).collect {
       case dir if dir.getName.startsWith("bucket_day=") =>
@@ -302,7 +418,7 @@ object Snapshot {
     }.toMap
     val days = files.collect { case (day, n) if n > 1 => day }.toSeq.sorted
     days.foreach { d =>
-      val day = spark.read.parquet(dayDir(dest, d))
+      val day = dataSchema.fold(spark.read)(spark.read.schema).parquet(dayDir(dest, d))
       day.coalesce(1).write.parquet(stagedDay(dest, d))
       // the rewrite must not change content: staged digest == manifest
       val schema = StructType(day.schema.fields :+ StructField("bucket_day", StringType))
@@ -311,7 +427,7 @@ object Snapshot {
         require(got.get(d) == w.get(d),
           s"compaction read-back of bucket_day=$d diverges from the manifest at $dest")
       }
-      commitTxn(spark, dest, Seq((Some(stagedDay(dest, d)), dayDir(dest, d))), Nil)
+      commitTxn(dest, Seq((Some(stagedDay(dest, d)), dayDir(dest, d))), Nil)
     }
     val after = files.values.map(n => if (n > 1) 1 else n).sum
     CompactReport(days, files.values.sum.toLong, after.toLong)
@@ -389,7 +505,7 @@ object Snapshot {
     */
   def deduplicate(spark: SparkSession, dest: String): MutationReport = AtomicDir.withLease(dest) {
     val manifest = requireManifest(spark, dest)
-    val log = mutationLog(spark, dest, "OPTIMIZE DEDUPLICATE", "")
+    val log = mutationLog(dest, "OPTIMIZE DEDUPLICATE", "")
     val resolved = resolve(spark, dest, Some(manifest))
     val dataCols = resolved.columns.filterNot(_ == "bucket_day").sorted
     val perDay = resolved.groupBy("bucket_day").agg(
@@ -406,7 +522,7 @@ object Snapshot {
     */
   private val MutationsDir = "_graft_mutations"
 
-  /** The mutation log's fixed schema (its only writer is [[mutationLog]]). */
+  /** The mutation log's fixed schema (its only writer is [[commitTxn]]). */
   private val MutationsSchema = StructType.fromDDL("mutation_id BIGINT, " +
     "event_time_ms BIGINT, command STRING, predicate STRING, days_rewritten BIGINT, " +
     "days_dropped BIGINT, rows_affected BIGINT, is_done BOOLEAN")
@@ -420,32 +536,30 @@ object Snapshot {
     * — ordinal, wall-clock time, command, predicate, day/row impact,
     * completion flag (always true: mutations here are synchronous,
     * where ClickHouse's are queued). Pure metadata, committed with the
-    * mutation it logs; model-scale by construction.
+    * mutation it logs; model-scale by construction: read on the driver
+    * into a local relation, no Spark job.
     */
   def mutations(spark: SparkSession, dest: String): DataFrame =
-    readSidecar(spark, dest, MutationsDir, Some(MutationsSchema)).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), MutationsSchema))
+    spark.createDataFrame(mutationRows(dest).asJava, MutationsSchema)
+
+  private def mutationRows(dest: String): Seq[Row] =
+    readSidecarRows(dest, MutationsDir, MutationsSchema).fold(Seq.empty[Row])(_._1)
 
   /** The log with one more row for a mutation's report. The prior rows
     * are read now, before the mutation stages anything (the lease
     * holder's sidecar read discards uncommitted staging); the new log
     * commits with the mutation ([[commitTxn]]).
     */
-  private def mutationLog(spark: SparkSession, dest: String, command: String,
-      predicate: String): MutationReport => DataFrame = {
-    import spark.implicits._
-    val prior = mutations(spark, dest).collect().map(x =>
-      (x.getLong(0), x.getLong(1), x.getString(2), x.getString(3),
-        x.getLong(4), x.getLong(5), x.getLong(6), x.getBoolean(7))).toSeq
-    val nextId = prior.map(_._1).maxOption.getOrElse(0L) + 1
-    r => (prior :+ (nextId, System.currentTimeMillis(), command, predicate,
-      r.daysRewritten.length.toLong, r.daysDropped.length.toLong,
-      r.rowsAffected, true)).toDF("mutation_id", "event_time_ms",
-      "command", "predicate", "days_rewritten", "days_dropped", "rows_affected", "is_done")
+  private def mutationLog(dest: String, command: String,
+      predicate: String): MutationReport => Seq[Row] = {
+    val prior = mutationRows(dest)
+    val nextId = prior.map(_.getLong(0)).maxOption.getOrElse(0L) + 1
+    r => prior :+ Row(nextId, System.currentTimeMillis(), command, predicate,
+      r.daysRewritten.length.toLong, r.daysDropped.length.toLong, r.rowsAffected, true)
   }
 
   private[graft] def requireManifest(spark: SparkSession, dest: String): Manifest =
-    readManifest(spark, dest).getOrElse(
+    readManifest(dest).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot at $dest has no manifest — re-run Snapshot.backup on it"))
 
@@ -456,12 +570,12 @@ object Snapshot {
     */
   private[graft] def manifestDigests(
       spark: SparkSession, dest: String): Seq[(String, Long, String)] =
-    requireManifest(spark, dest)._2.map(r => (r._1, r._3, r._4))
+    requireManifest(spark, dest).rows.map(r => (r._1, r._3, r._4))
 
   private def mutate(spark: SparkSession, dest: String, command: String, predicate: Column,
       rewriteDay: DataFrame => DataFrame): MutationReport = {
     val manifest = requireManifest(spark, dest)
-    val log = mutationLog(spark, dest, command, predicateSql(predicate))
+    val log = mutationLog(dest, command, predicateSql(predicate))
     val resolved = resolve(spark, dest, Some(manifest))
     // one pass over the resolved view: which days contain matches, and
     // how many rows (metadata-scale collect — one row per affected day)
@@ -485,12 +599,11 @@ object Snapshot {
   private def rewriteDayPartitions(spark: SparkSession, dest: String,
       manifest: Manifest, resolved: DataFrame,
       affected: Seq[String], rewriteDay: DataFrame => DataFrame,
-      rowsAffected: Long, log: MutationReport => DataFrame): MutationReport = {
+      rowsAffected: Long, log: MutationReport => Seq[Row]): MutationReport = {
     if (affected.isEmpty) {
-      commitTxn(spark, dest, Nil, Nil, Some(log(MutationReport(Nil, Nil, 0L))))
+      commitTxn(dest, Nil, Nil, Some(log(MutationReport(Nil, Nil, 0L))))
       return MutationReport(Nil, Nil, 0L)
     }
-    val (base, manifestRows) = manifest
     val data = s"$dest/$TxnDir/data"
     val out = rewriteDay(resolved.filter(col("bucket_day").isin(affected: _*)))
     out.write.mode("overwrite").partitionBy("bucket_day").parquet(data)
@@ -498,7 +611,7 @@ object Snapshot {
     val staged = fs.listStatus(new Path(data)).map(_.getPath.getName)
       .collect { case n if n.startsWith("bucket_day=") => n.stripPrefix("bucket_day=") }.toSet
     val (rewrittenDays, droppedDays) = affected.partition(staged)
-    if ((manifestRows.map(_._1).toSet -- droppedDays).isEmpty) {
+    if ((manifest.rows.map(_._1).toSet -- droppedDays).isEmpty) {
       // refuse BEFORE anything is destroyed — the guard must protect
       // the data, not lament it
       fs.delete(new Path(s"$dest/$TxnDir"), true)
@@ -508,7 +621,7 @@ object Snapshot {
     val newDigests = digestDays(spark, data, rewrittenDays, out.schema)
     require(newDigests.keySet == rewrittenDays.toSet, "mutation read-back lost day(s): " +
       (rewrittenDays.toSet -- newDigests.keySet).mkString(", "))
-    val newRows = manifestRows.flatMap { case (day, n, x, s, source) =>
+    val newRows = manifest.rows.flatMap { case (day, n, x, s, source) =>
       if (droppedDays.contains(day)) None
       else newDigests.get(day) match {
         case Some((n2, x2, s2)) =>
@@ -518,10 +631,10 @@ object Snapshot {
       }
     }
     val report = MutationReport(rewrittenDays, droppedDays, rowsAffected)
-    commitTxn(spark, dest,
+    commitTxn(dest,
       rewrittenDays.map(d => (Some(stagedDay(dest, d)), dayDir(dest, d))) ++
         droppedDays.map(d => (None, dayDir(dest, d))),
-      Seq(dest -> ((base, newRows))), Some(log(report)))
+      Seq(dest -> manifest.copy(rows = newRows)), Some(log(report)))
     report
   }
 
@@ -534,8 +647,7 @@ object Snapshot {
     */
   def parts(spark: SparkSession, dest: String): DataFrame = {
     import spark.implicits._
-    val (_, rows) = requireManifest(spark, dest)
-    rows.map(r => (r._1, r._2, r._5))
+    requireManifest(spark, dest).rows.map(r => (r._1, r._2, r._5))
       .toDF("bucket_day", "n_rows", "source")
   }
 
@@ -567,11 +679,20 @@ object Snapshot {
 
   /** `day`'s manifest row; refuses an unknown day and the only day. */
   private def removableDay(m: Manifest, dest: String, day: String, verb: String) = {
-    val row = m._2.find(_._1 == day).getOrElse(throw new IllegalArgumentException(
-      s"no partition bucket_day=$day in snapshot $dest (have: ${m._2.map(_._1).mkString(", ")})"))
-    require(m._2.length > 1,
+    val row = m.rows.find(_._1 == day).getOrElse(throw new IllegalArgumentException(
+      s"no partition bucket_day=$day in snapshot $dest (have: ${m.rows.map(_._1).mkString(", ")})"))
+    require(m.rows.length > 1,
       s"refusing to $verb the only partition of $dest — that would empty the snapshot")
     row
+  }
+
+  /** `m` with `day`'s (n, xor, sum) row added, locally sourced: `delta`
+    * on a chain, else `full`.
+    */
+  private def withDay(m: Manifest, day: (String, Long, Long, String)): Manifest = {
+    val (d, n, x, s) = day
+    m.copy(rows = (m.rows :+ ((d, n, x, s, if (m.base.isDefined) "delta" else "full")))
+      .sortBy(_._1))
   }
 
   /** Fails, before anything is written, unless the data columns agree. */
@@ -596,7 +717,7 @@ object Snapshot {
     */
   def detachPartition(spark: SparkSession, dest: String, day: String): Unit =
       AtomicDir.withLease(dest) {
-    val manifest @ (base, rows) = requireManifest(spark, dest)
+    val manifest = requireManifest(spark, dest)
     val row = removableDay(manifest, dest, day, "detach")
     val fs = AtomicDir.fileSystem(dest)
     // nested under a plain `_`-prefixed dir: a name containing `=` at
@@ -616,8 +737,8 @@ object Snapshot {
           .write.parquet(stagedDay(dest, day))
         stagedDay(dest, day)
       }
-    commitTxn(spark, dest, Seq((Some(from), detached)),
-      Seq(dest -> ((base, rows.filterNot(_._1 == day)))))
+    commitTxn(dest, Seq((Some(from), detached)),
+      Seq(dest -> manifest.copy(rows = manifest.rows.filterNot(_._1 == day))))
   }
 
   /** `ALTER TABLE … ATTACH PARTITION` — bring a detached day back: the
@@ -629,8 +750,8 @@ object Snapshot {
     */
   def attachPartition(spark: SparkSession, dest: String, day: String): Unit =
       AtomicDir.withLease(dest) {
-    val (base, rows) = requireManifest(spark, dest)
-    require(!rows.exists(_._1 == day),
+    val manifest = requireManifest(spark, dest)
+    require(!manifest.rows.exists(_._1 == day),
       s"partition bucket_day=$day is already attached at $dest")
     val detached = s"$dest/_detached/bucket_day=$day"
     require(AtomicDir.fileSystem(dest).exists(new Path(detached)),
@@ -642,9 +763,8 @@ object Snapshot {
     require(dig.get(day).exists(_._1 > 0),
       s"attach read-back failed for bucket_day=$day at $dest")
     val (n, x, s) = dig(day)
-    commitTxn(spark, dest, Seq((Some(detached), dayDir(dest, day))),
-      Seq(dest -> ((base, (rows :+ ((day, n, x, s, if (base.isDefined) "delta" else "full")))
-        .sortBy(_._1)))))
+    commitTxn(dest, Seq((Some(detached), dayDir(dest, day))),
+      Seq(dest -> withDay(manifest, (day, n, x, s))))
   }
 
   /** `ALTER TABLE … DROP PARTITION` — discard one day outright: the
@@ -658,10 +778,10 @@ object Snapshot {
     */
   def dropPartition(spark: SparkSession, dest: String, day: String): Unit =
       AtomicDir.withLease(dest) {
-    val manifest @ (base, rows) = requireManifest(spark, dest)
+    val manifest = requireManifest(spark, dest)
     val row = removableDay(manifest, dest, day, "drop")
-    commitTxn(spark, dest, if (row._5 != "base") Seq((None, dayDir(dest, day))) else Nil,
-      Seq(dest -> ((base, rows.filterNot(_._1 == day)))))
+    commitTxn(dest, if (row._5 != "base") Seq((None, dayDir(dest, day))) else Nil,
+      Seq(dest -> manifest.copy(rows = manifest.rows.filterNot(_._1 == day))))
   }
 
   /** `ALTER TABLE … MOVE PARTITION TO TABLE` — re-home one day from
@@ -676,12 +796,12 @@ object Snapshot {
     */
   def movePartition(spark: SparkSession, srcDest: String, dstDest: String,
       day: String): Unit = AtomicDir.withLease(srcDest)(AtomicDir.withLease(dstDest) {
-    val srcManifest @ (srcBase, srcRows) = requireManifest(spark, srcDest)
+    val srcManifest = requireManifest(spark, srcDest)
     val row = removableDay(srcManifest, srcDest, day, "move")
     // fail fast with nothing moved: destination must be a manifested
     // snapshot without the day, and the schemas must line up
-    val dstManifest @ (dstBase, dstRows) = requireManifest(spark, dstDest)
-    require(!dstRows.exists(_._1 == day),
+    val dstManifest = requireManifest(spark, dstDest)
+    require(!dstManifest.rows.exists(_._1 == day),
       s"destination $dstDest already holds bucket_day=$day")
     val srcSnap = resolve(spark, srcDest, Some(srcManifest))
     val dstSnap = resolve(spark, dstDest, Some(dstManifest))
@@ -696,10 +816,9 @@ object Snapshot {
     val dig = digestDays(spark, from, Seq(day), srcSnap.schema)
     require(dig.get(day).contains((row._2, row._3, row._4)),
       s"move read-back of bucket_day=$day diverges from the manifest of $srcDest")
-    commitTxn(spark, dstDest, Seq((Some(dayDir(from, day)), dayDir(dstDest, day))), Seq(
-      srcDest -> ((srcBase, srcRows.filterNot(_._1 == day))),
-      dstDest -> ((dstBase, (dstRows :+ ((day, row._2, row._3, row._4,
-        if (dstBase.isDefined) "delta" else "full"))).sortBy(_._1)))))
+    commitTxn(dstDest, Seq((Some(dayDir(from, day)), dayDir(dstDest, day))), Seq(
+      srcDest -> srcManifest.copy(rows = srcManifest.rows.filterNot(_._1 == day)),
+      dstDest -> withDay(dstManifest, (day, row._2, row._3, row._4))))
   })
 
   /** `ALTER TABLE … REPLACE PARTITION … FROM src` — adopt the source
@@ -712,10 +831,10 @@ object Snapshot {
     */
   def replacePartition(spark: SparkSession, srcDest: String, dstDest: String,
       day: String): Unit = AtomicDir.withLease(dstDest) {
-    val srcManifest @ (_, srcRows) = requireManifest(spark, srcDest)
-    require(srcRows.exists(_._1 == day),
+    val srcManifest = requireManifest(spark, srcDest)
+    require(srcManifest.rows.exists(_._1 == day),
       s"source $srcDest has no partition bucket_day=$day")
-    val dstManifest @ (base, dstRows) = requireManifest(spark, dstDest)
+    val dstManifest = requireManifest(spark, dstDest)
     val srcSnap = resolve(spark, srcDest, Some(srcManifest))
     val dstSnap = resolve(spark, dstDest, Some(dstManifest))
     requireSameSchema(srcSnap, dstSnap, s"replacing bucket_day=$day")
@@ -725,9 +844,9 @@ object Snapshot {
     require(dig.get(day).exists(_._1 > 0),
       s"replace read-back failed for bucket_day=$day at $dstDest")
     val (n, x, s) = dig(day)
-    commitTxn(spark, dstDest, Seq((Some(stagedDay(dstDest, day)), dayDir(dstDest, day))),
-      Seq(dstDest -> ((base, (dstRows.filterNot(_._1 == day) :+
-        ((day, n, x, s, if (base.isDefined) "delta" else "full"))).sortBy(_._1)))))
+    commitTxn(dstDest, Seq((Some(stagedDay(dstDest, day)), dayDir(dstDest, day))),
+      Seq(dstDest -> withDay(dstManifest.copy(rows = dstManifest.rows.filterNot(_._1 == day)),
+        (day, n, x, s))))
   }
 
   /** Hidden schema-evolution sidecar: the ordered `ALTER TABLE ADD/
@@ -750,13 +869,13 @@ object Snapshot {
   def addColumn(spark: SparkSession, dest: String, name: String,
       defaultSql: String, dataType: String): Unit = {
     requireManifest(spark, dest) // only evolve real snapshots
+    val log = readSchemaLog(dest)
     require(!resolve(spark, dest).columns.contains(name) &&
-        !readSchemaLog(spark, dest).exists(r => r._2 == "add" && r._3 == name),
+        !log.exists(r => r._2 == "add" && r._3 == name),
       s"column $name already exists at $dest")
     // validate the default parses and casts NOW, not at first read
     spark.range(1).select(expr(defaultSql).cast(dataType))
-    writeSchemaLog(spark, dest,
-      readSchemaLog(spark, dest) :+ ((nextOrd(spark, dest), "add", name, defaultSql, dataType)))
+    writeSchemaLog(dest, log :+ ((nextOrd(log), "add", name, defaultSql, dataType)))
   }
 
   /** `ALTER TABLE … DROP COLUMN` — metadata-only: the column vanishes
@@ -769,8 +888,8 @@ object Snapshot {
     require(readEvolved(spark, dest).columns.contains(name),
       s"no column $name at $dest")
     require(name != "bucket_day", "cannot drop the partition column")
-    writeSchemaLog(spark, dest,
-      readSchemaLog(spark, dest) :+ ((nextOrd(spark, dest), "drop", name, null, null)))
+    val log = readSchemaLog(dest)
+    writeSchemaLog(dest, log :+ ((nextOrd(log), "drop", name, null, null)))
   }
 
   /** [[resolve]] with the schema-evolution log replayed in order:
@@ -781,7 +900,7 @@ object Snapshot {
     */
   def readEvolved(spark: SparkSession, dest: String): DataFrame = {
     var df = resolve(spark, dest)
-    readSchemaLog(spark, dest).sortBy(_._1).foreach {
+    readSchemaLog(dest).foreach {
       case (_, "add", name, defaultSql, dtype) =>
         df =
           if (df.columns.contains(name))
@@ -795,21 +914,20 @@ object Snapshot {
     df
   }
 
-  private def nextOrd(spark: SparkSession, dest: String): Long =
-    readSchemaLog(spark, dest).map(_._1).maxOption.getOrElse(0L) + 1L
+  private type SchemaLog = Seq[(Long, String, String, String, String)]
 
-  private def readSchemaLog(spark: SparkSession, dest: String)
-      : Seq[(Long, String, String, String, String)] =
-    readSidecar(spark, dest, SchemaDir, Some(SchemaLogSchema)).toSeq.flatMap(_.collect())
+  private def nextOrd(log: SchemaLog): Long = log.map(_._1).maxOption.getOrElse(0L) + 1L
+
+  /** The schema log of `dest` in order, read on the driver. */
+  private def readSchemaLog(dest: String): SchemaLog =
+    readSidecarRows(dest, SchemaDir, SchemaLogSchema).fold(Seq.empty[Row])(_._1)
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getString(4)))
       .sortBy(_._1)
 
-  private def writeSchemaLog(spark: SparkSession, dest: String,
-      rows: Seq[(Long, String, String, String, String)]): Unit = {
-    import spark.implicits._
-    writeSidecar(dest, SchemaDir, rows.toDF("ord", "action", "name", "default_sql", "data_type"))
-  }
+  private def writeSchemaLog(dest: String, log: SchemaLog): Unit =
+    writeSidecar(dest, SchemaDir,
+      writeParquet(_, SchemaLogSchema, log.map(Row.fromTuple), Map.empty))
 
   /** digest() collected as (day, n, xor, sum-string) tuples. */
   private def digestScan(df: DataFrame): Seq[(String, Long, Long, String)] =
@@ -827,30 +945,55 @@ object Snapshot {
       .parquet(days.map(dayDir(parent, _)): _*))
       .map { case (d, n, x, s) => d -> ((n, x, s)) }.toMap
 
-  private def manifestDf(spark: SparkSession, m: Manifest): DataFrame = {
-    import spark.implicits._
-    m._2.map { case (d, n, x, s, src) => (d, n, x, s, src, m._1.orNull) }
-      .toDF("bucket_day", "n_rows", "content_xor", "content_sum", "source", "base_path")
-      .coalesce(1)
+  /** The schema a read of data written from `bucketed` infers with
+    * partition-type inference off: its data columns, every one nullable
+    * at every depth (parquet reads make them so), then `bucket_day`.
+    */
+  private def recordedSchema(bucketed: DataFrame): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val data = bucketed.schema.fields.filterNot(_.name == "bucket_day")
+    StructType(nullable(StructType(data)).asInstanceOf[StructType].fields :+
+      StructField("bucket_day", StringType))
   }
 
-  /** Replace sidecar `name` of `dest` with `df` through an AtomicDir
-    * swap: a plain overwrite deletes the old sidecar before the new one
-    * exists — for a BACKUP's manifest, a crash in that window would
-    * orphan the snapshot's gc/incremental/mutation surface (restore
-    * still works; everything manifest-driven refuses).
+  /** Writes `m` as one parquet file at `file`: one row per day, and the
+    * data schema (if known) in the footer.
     */
-  private def writeSidecar(dest: String, name: String, df: DataFrame): Unit = {
+  private def writeManifestFile(file: String, m: Manifest): Unit =
+    writeParquet(file, ManifestSchema,
+      m.rows.map { case (d, n, x, s, src) => Row(d, n, x, s, src, m.base.orNull) },
+      m.schema.map(DataSchemaKey -> _.json).toMap)
+
+  private def writeManifest(dest: String, m: Manifest): Unit =
+    writeSidecar(dest, ManifestDir, writeManifestFile(_, m))
+
+  /** Replace sidecar `name` of `dest` with the one part file `write`
+    * writes on the driver, through an AtomicDir swap: a plain overwrite
+    * deletes the old sidecar before the new one exists — for a BACKUP's
+    * manifest, a crash in that window would orphan the snapshot's
+    * gc/incremental/mutation surface (restore still works; everything
+    * manifest-driven refuses).
+    */
+  private def writeSidecar(dest: String, name: String, write: String => Unit): Unit = {
     val dir = s"$dest/$name"
     AtomicDir.recover(dir)
-    df.coalesce(1).write.mode("overwrite").parquet(AtomicDir.tmpPath(dir))
+    val tmp = AtomicDir.tmpPath(dir)
+    AtomicDir.fileSystem(tmp).delete(new Path(tmp), true)
+    write(s"$tmp/$PartFile")
     AtomicDir.swap(dir)
   }
 
   /** THE snapshot commit of every day-level verb. The caller has
     * staged each new day under `_graft_txn/` and checked its digests;
-    * this stages each snapshot's new manifest, and `dest`'s new mutation
-    * log if any, beside them and commits `days` — (staged, live) pairs,
+    * this writes each snapshot's new manifest, and `dest`'s new mutation
+    * log if any, beside them on the driver and commits `days` — (staged, live) pairs,
     * `None` retiring a live day — the manifests and the log as ONE
     * [[AtomicDir.commit]], so a crash leaves every snapshot wholly
     * before or after the verb ([[recoverTxn]]). Another
@@ -859,16 +1002,16 @@ object Snapshot {
     * every snapshot's lease, after the verb's last sidecar read (the
     * holder's recovery discards uncommitted staging).
     */
-  private def commitTxn(spark: SparkSession, dest: String,
+  private def commitTxn(dest: String,
       days: Seq[(Option[String], String)], manifests: Seq[(String, Manifest)],
-      log: Option[DataFrame] = None): Unit = {
+      log: Option[Seq[Row]] = None): Unit = {
     val txn = s"$dest/$TxnDir"
     val fs = AtomicDir.fileSystem(txn)
     val staged = manifests.zipWithIndex.map { case ((snap, m), i) =>
-      manifestDf(spark, m).write.parquet(s"$txn/manifest$i")
+      writeManifestFile(s"$txn/manifest$i/$PartFile", m)
       (Some(s"$txn/manifest$i"), s"$snap/$ManifestDir")
-    } ++ log.map { df =>
-      df.coalesce(1).write.parquet(s"$txn/mutations")
+    } ++ log.map { rows =>
+      writeParquet(s"$txn/mutations/$PartFile", MutationsSchema, rows, Map.empty)
       (Some(s"$txn/mutations"), s"$dest/$MutationsDir")
     }
     val others = manifests.map(_._1).filter(_ != dest)
@@ -903,37 +1046,46 @@ object Snapshot {
     AtomicDir.recoverStaged(dest, txn.toString)
   }
 
-  /** The [[Manifest]] of `dir` (after [[recoverTxn]]); None when the
-    * directory has no manifest (a bare parquet dataset). One Spark
-    * job: the schema is known.
+  /** The [[Manifest]] of `dir` (after [[recoverTxn]]), read on the
+    * driver; None when the directory has no manifest (a bare parquet
+    * dataset).
     */
-  private def readManifest(spark: SparkSession, dir: String): Option[Manifest] =
-    readSidecar(spark, dir, ManifestDir, Some(ManifestSchema)).map { df =>
-      val rows = df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
-          r.getString(4), Option(r.getString(5))))
-      val bases = rows.flatMap(_._6).distinct
+  private def readManifest(dir: String): Option[Manifest] =
+    readSidecarRows(dir, ManifestDir, ManifestSchema).map { case (rows, meta) =>
+      val bases = rows.flatMap(r => Option(r.getString(5))).distinct
       require(bases.length <= 1, s"manifest at $dir names multiple bases: ${bases.mkString(",")}")
-      (bases.headOption, rows.map(r => (r._1, r._2, r._3, r._4, r._5)).toSeq)
+      Manifest(bases.headOption,
+        rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3), r.getString(4))),
+        meta.get(DataSchemaKey).map(DataType.fromJson(_).asInstanceOf[StructType]))
     }
 
-  /** RESTORE analog: read the snapshot back (schema from parquet
-    * footers — the engine is schema-dynamic like the reference, which
-    * backs up whatever schema the DB has). Partition-column type
-    * inference is disabled DURING the read (and restored after — the
-    * read resolves its schema eagerly) so `bucket_day` comes back as
-    * the string it was written as without perturbing the caller's
-    * session for unrelated reads.
+  /** RESTORE analog: read the snapshot back — the engine is
+    * schema-dynamic like the reference, which backs up whatever schema
+    * the DB has — with the schema its manifest recorded at BACKUP.
     */
-  def restore(spark: SparkSession, dest: String): DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try spark.read.parquet(dest)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  def restore(spark: SparkSession, dest: String): DataFrame =
+    readData(spark, dest, readManifest(dest).flatMap(_.schema))
+
+  /** The data under `dest` read with `schema`: no schema-inference job,
+    * and `bucket_day` reads as the string it was written as. Without a
+    * schema (a directory with no manifest, or a manifest from before
+    * the schema was recorded) the footers are inferred, with
+    * partition-column type inference disabled DURING the read (and
+    * restored after — the read resolves its schema eagerly) so
+    * `bucket_day` still comes back as a string.
+    */
+  private def readData(spark: SparkSession, dest: String,
+      schema: Option[StructType]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(dest)
+    case None =>
+      val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "false")
+      try spark.read.parquet(dest)
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
   }
 
   /** Format-parametric export — the `BACKUP_SUFFIX` axis of the

@@ -17,6 +17,27 @@ class GraftTestFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
 }
 
+/** Local storage under `countfs://` that counts every open per path,
+  * so a spec can tell how often each file is read, whoever reads it:
+  * a Spark task or the driver ([[SnapshotJobCountSpec]]). Registered
+  * via `fs.countfs.impl`.
+  */
+class CountingOpenFs extends RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: URI = URI.create("countfs:///")
+
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingOpenFs.opens.merge(f.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingOpenFs {
+  /** Opens per path (the path part of the URI). */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+}
+
 /** A FileSystem whose `rename` is COPY-THEN-DELETE — the object-store
   * semantics AtomicDir's marker protocol exists for (AtomicDir.scala:
   * 38–41) — with injectable crash points, so the documented torn

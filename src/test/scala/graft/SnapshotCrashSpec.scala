@@ -98,7 +98,7 @@ class SnapshotCrashSpec extends SparkSpec {
       .toMap
     val log = Snapshot.mutations(spark, dest).drop("event_time_ms")
       .orderBy("mutation_id").collect().map(_.toSeq).toSeq
-    ((manifest._1, manifest._2.sortBy(_._1)), readBack, layout, log)
+    ((manifest.base, manifest.rows.sortBy(_._1)), readBack, layout, log)
   }
 
   private def noStaging(dest: String): Boolean =
